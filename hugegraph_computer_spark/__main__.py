@@ -42,7 +42,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--max-supersteps", type=int, default=10)
     p.add_argument("--l1-threshold", type=float, default=1e-6)
     p.add_argument("--alpha", type=float, default=0.15)
-    p.add_argument("--kernel", default="sql", choices=["sql", "arrow", "auto"])
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--no-symmetrize", action="store_true",
@@ -145,13 +144,11 @@ def main(argv: list[str] | None = None) -> int:
     kw: dict = {}
     if args.algorithm == "page_rank":
         kw = dict(alpha=args.alpha, l1_threshold=args.l1_threshold,
-                  max_supersteps=args.max_supersteps, kernel=args.kernel,
+                  max_supersteps=args.max_supersteps,
                   checkpoint_dir=args.checkpoint_dir, resume=args.resume)
     elif args.algorithm in ("wcc", "lpa"):
         kw = dict(max_supersteps=args.max_supersteps,
                   checkpoint_dir=args.checkpoint_dir, resume=args.resume)
-        if args.algorithm == "wcc":
-            kw["kernel"] = args.kernel
     elif args.algorithm == "closeness_centrality":
         kw = dict(sources=args.sources, max_supersteps=args.max_supersteps,
                   checkpoint_dir=args.checkpoint_dir, resume=args.resume)

@@ -8,6 +8,12 @@ driver IS the master, and global aggregators are a single ``agg().collect()``
 per superstep (the reference exchanges them over RPC,
 aggregator/WorkerAggrManager.java:89-141).
 
+``SuperstepLoop.run(init, step, halt)`` is that master loop, once, for every
+full-state operator (pagerank, personalized_pagerank, wcc, lpa, coreness,
+``graph.program.run_program``): each operator supplies only its superstep-0
+plan, its per-superstep plan with the aggregators to observe, and its stop
+rule.
+
 What the reference left as a TODO — resume (MasterService.java:213, 316-322)
 — is implemented here for real, per the north rule:
 
@@ -38,9 +44,10 @@ import math
 import os
 import shutil
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -106,8 +113,60 @@ class SuperstepLoop:
         # rule's lineage story. This sandbox has no Iceberg jar, so the
         # default (and the tests) exercise the same code path with parquet.
         self.snapshot_format = snapshot_format
+        self._resume = resume
         self.history: list[SuperstepRecord] = []
         self._persisted: list[DataFrame] = []
+        # set by run(): the last superstep reached and its aggregates
+        self.superstep: int | None = None
+        self.aggregates: dict = {}
+
+    # --------------------------------------------------------------- driver
+    def run(
+        self,
+        init: Callable[[], tuple[DataFrame, dict]],
+        step: Callable[[int, DataFrame, dict], tuple[DataFrame, dict[str, Column]]],
+        halt: Callable[[int, dict], bool],
+    ) -> DataFrame:
+        """Drive the job's supersteps and return the last state.
+
+        * ``init() -> (state, aggregates)`` builds superstep 0 (compute0);
+          it runs only when there is no snapshot to resume from.
+        * ``step(s, state, prev_aggs) -> (new_state, {name: Column})``
+          builds superstep ``s``'s plan; the aggregator columns ride its
+          single materialization through ``observe``.
+        * ``halt(s, aggs) -> bool`` is the master rule
+          (MasterComputation.compute). Its decision is stored in the
+          aggregates as ``continue``, so a resume never re-evaluates it.
+
+        Each new state is projected onto the superstep-0 columns, so a
+        step may carry helper columns for its aggregators only (PageRank's
+        ``old_rank``). The run stops after superstep ``max_supersteps - 1``.
+        ``superstep`` and ``aggregates`` then hold where it ended — also
+        when the resumed snapshot was already final."""
+        resumed = self.resume() if self._resume else None
+        if resumed is not None:
+            s, state, aggs = resumed
+        else:
+            s = 0
+            state, aggs = init()
+            aggs["continue"] = True
+            state = self.save(0, state, aggs, {"supersteps": 0})
+        cols = state.columns
+        while aggs.get("continue", True) and s < self.max_supersteps - 1:
+            s += 1
+            new_state, agg_cols = step(s, state, aggs)
+            t0 = time.time()
+            obs = Observation(f"{self.job_name}_s{s}")
+            observed = new_state.observe(
+                obs, *[c.alias(k) for k, c in agg_cols.items()]
+            ).select(*cols)
+            state = self.materialize(s, observed)
+            aggs = dict(obs.get)
+            aggs["continue"] = not halt(s, aggs) and s < self.max_supersteps - 1
+            self.commit(s, aggs, {"supersteps": s, "step_sec": time.time() - t0})
+        self.cleanup()
+        self.superstep, self.aggregates = s, aggs
+        return state
 
     # ------------------------------------------------------------- snapshot
     def _step_dir(self, superstep: int) -> str:

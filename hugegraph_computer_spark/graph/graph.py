@@ -114,7 +114,6 @@ class Graph:
     _adj_cache: dict = field(default_factory=dict, repr=False)
     _vertices: DataFrame | None = None
     _num_vertices: int | None = None
-    _max_vid: int | None = None
 
     # ---------------------------------------------------------------- build
     @staticmethod
@@ -305,16 +304,6 @@ class Graph:
             self._num_vertices = self.vertices().count()
         return self._num_vertices
 
-    def max_vid(self) -> int:
-        """Largest vertex id — bounds the dense accumulator of the Arrow
-        gather-scatter kernel (graph.scatter)."""
-        if self._max_vid is None:
-            row = self.edges.agg(
-                F.max(F.greatest(F.col("src"), F.col("dst"))).alias("m")
-            ).collect()[0]
-            self._max_vid = int(row["m"]) if row["m"] is not None else -1
-        return self._max_vid
-
     def degrees(self, weighted: bool = False) -> DataFrame:
         """(vid, deg) — out-degree of the (already symmetrized) edge table;
         0 for isolated vertices. This is the reference's ``numEdges()``
@@ -399,9 +388,8 @@ class Graph:
     ) -> DataFrame:
         """Flat edges hash-partitioned by src and sorted within
         partitions — the co-partitioned STATIC side for every
-        per-superstep ``frontier ⋈ edges`` join (flat Arrow scatter,
-        Brandes/closeness level floods, rings/links path floods, k-core
-        peeling). Cached like the chunked adjacency: without it each
+        per-superstep ``frontier ⋈ edges`` join (Brandes/closeness level
+        floods, rings/links path floods, k-core peeling). Cached like the chunked adjacency: without it each
         level re-scans the source and re-shuffles the full edge table,
         a D× constant factor at scale; the persisted relation instead
         advertises HashPartitioning(src) + src sort order, so the join

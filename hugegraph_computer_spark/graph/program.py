@@ -30,18 +30,17 @@ messaging.
         master_continue,  # (superstep, aggs dict) -> bool ≡ MasterComputation
     )
 
-``run_program`` is the generic loop; the tuned built-ins (pagerank/wcc/lpa)
-are hand-specialized instances of the same shape (their docstrings map each
-stage), kept separate only to pin exact reference formulas.
+``run_program`` adapts a program to ``SuperstepLoop.run``, the one superstep
+loop the built-ins (pagerank/wcc/lpa/coreness) drive too; they hand it
+their own ``step`` plans only to pin exact reference formulas.
 """
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 from hugegraph_computer_spark.graph.graph import Graph
@@ -68,7 +67,7 @@ def run_program(
     checkpoint_every: int = 1,
     resume: bool = False,
 ) -> DataFrame:
-    """Generic superstep loop for a VertexProgram.
+    """Run a VertexProgram on ``SuperstepLoop.run``.
 
     State contract: ``init`` returns (vid, ..., active boolean); each
     superstep scatters messages from active vertices along the (cached,
@@ -83,29 +82,16 @@ def run_program(
     )
     adj = graph.adjacency()
 
-    start = 1
-    state = None
-    if resume:
-        resumed = loop.resume()
-        if resumed is not None:
-            s, state, aggs = resumed
-            if not aggs.get("__continue__", True):
-                return state
-            start = s + 1
-
-    if state is None:
+    def init():
         state = program.init(graph.vertices())
-        assert "vid" in state.columns and "active" in state.columns, (
-            "init must produce (vid, ..., active)"
-        )
-        state = loop.save(0, state, {"__continue__": True}, {"supersteps": 0})
+        if "vid" not in state.columns or "active" not in state.columns:
+            raise ValueError("init must produce (vid, ..., active)")
+        return state, {}
 
-    state_cols = [c for c in state.columns if c != "active"]
-    for s in range(start, max_supersteps):
-        t0 = time.time()
+    def step(s, state, aggs):
         frontier = state.where("active")
         scatter = adj.join(frontier, "vid").select(
-            *[frontier[c] for c in state_cols],
+            *[frontier[c] for c in state.columns if c != "active"],
             F.explode("nbrs").alias("dst"),
         )
         msgs = (
@@ -113,25 +99,16 @@ def run_program(
             .groupBy("dst")
             .agg(*program.combine())
         )
-        new_state = program.apply(state, msgs)
-        obs = Observation(f"{program.name}_s{s}")
-        agg_cols = [c.alias(k) for k, c in program.aggregators().items()]
-        observed = new_state.observe(
-            obs,
-            F.sum(F.col("active").cast("long")).alias("__active__"),
-            *agg_cols,
-        )
-        state = loop.materialize(s, observed)
-        row = dict(obs.get)
-        active = int(row.pop("__active__") or 0)
-        cont = active > 0 and program.master_continue(s, row) and s < max_supersteps - 1
-        row["__continue__"] = cont
-        loop.commit(s, row, {"supersteps": s, "sec": time.time() - t0})
-        if not cont:
-            break
+        return program.apply(state, msgs), {
+            "__active__": F.sum(F.col("active").cast("long")),
+            **program.aggregators(),
+        }
 
-    loop.cleanup()
-    return state
+    def halt(s, aggs):
+        user = {k: v for k, v in aggs.items() if k != "__active__"}
+        return not aggs["__active__"] or not program.master_continue(s, user)
+
+    return loop.run(init, step, halt)
 
 
 # ---------------------------------------------------------------- examples

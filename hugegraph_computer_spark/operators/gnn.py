@@ -102,9 +102,9 @@ def neighborhood_sample(
         # walk operators weight draws by them), but sampling is over the
         # simple graph — duplicates would carry identical ranks and
         # crowd the fanout. Chunks slice the SORTED neighbor list, so a
-        # multigraph duplicate can only escape dedup when it straddles a
-        # chunk boundary (deg > chunk AND edge_freq='multiple'); default
-        # deduped loads are exact at every degree.
+        # multigraph duplicate escapes this per-chunk dedup only when it
+        # straddles a chunk boundary (deg > chunk AND
+        # edge_freq='multiple'); the hub merge below dedups again.
         ranked = F.array_sort(
             F.transform(
                 F.array_distinct(F.col("nbrs")),
@@ -132,7 +132,11 @@ def neighborhood_sample(
             .groupBy("avid")
             .agg(
                 F.slice(
-                    F.array_sort(F.flatten(F.collect_list("cand"))),
+                    # a straddling duplicate carries the same (rank, nbr)
+                    # struct from both chunks: adjacent once sorted
+                    F.array_distinct(
+                        F.array_sort(F.flatten(F.collect_list("cand")))
+                    ),
                     1,
                     int(fanout),
                 )

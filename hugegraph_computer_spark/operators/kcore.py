@@ -17,9 +17,7 @@ sort desc, count positions where value >= rank — no Python in the loop.
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 from hugegraph_computer_spark.graph.graph import Graph
@@ -55,17 +53,7 @@ def coreness(
     # and sort survive it), so each round's join re-shuffles nothing
     edges = graph.flat_edges(build_hash=True).where(F.col("src") != F.col("dst"))
 
-    start = 1
-    state = None
-    if resume:
-        resumed = loop.resume()
-        if resumed is not None:
-            s, state, aggs = resumed
-            if aggs.get("changed", 1) == 0 or s >= max_supersteps - 1:
-                return state.select("vid", F.col("h").alias("coreness"))
-            start = s + 1
-
-    if state is None:
+    def init():
         deg = edges.groupBy(F.col("src").alias("vid")).agg(
             F.count(F.lit(1)).cast("long").alias("deg")
         )
@@ -78,10 +66,9 @@ def coreness(
                 F.lit(True).alias("changed"),
             )
         )
-        state = loop.save(0, state, {"changed": -1}, {"supersteps": 0})
+        return state, {"changed": -1}
 
-    for s in range(start, max_supersteps):
-        t0 = time.time()
+    def step(s, state, aggs):
         # vertices adjacent to a change must recompute their H-index over
         # ALL current neighbor values (not only the changed ones)
         affected = (
@@ -114,15 +101,7 @@ def coreness(
                 (F.col("new_h") < F.col("old_h")).alias("changed"),
             )
         )
-        obs = Observation(f"{job_name}_s{s}")
-        observed = new_state.observe(
-            obs, F.sum(F.col("changed").cast("long")).alias("c")
-        )
-        state = loop.materialize(s, observed)
-        changed = int(obs.get["c"] or 0)
-        loop.commit(s, {"changed": changed}, {"supersteps": s, "sec": time.time() - t0})
-        if changed == 0:
-            break
+        return new_state, {"changed": F.sum(F.col("changed").cast("long"))}
 
-    loop.cleanup()
+    state = loop.run(init, step, lambda s, aggs: not aggs["changed"])
     return state.select("vid", F.col("h").alias("coreness"))

@@ -32,9 +32,7 @@ bounds the second stage).
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 from hugegraph_computer_spark.graph.graph import Graph
@@ -56,25 +54,14 @@ def lpa(
     )
     adj = graph.adjacency()
 
-    start = 1
-    state = None
-    if resume:
-        resumed = loop.resume()
-        if resumed is not None:
-            s, state, aggs = resumed
-            if aggs.get("senders", 1) == 0 or s >= max_supersteps - 1:
-                return state.select("vid", "label")
-            start = s + 1
-
-    if state is None:
+    def init():
         # superstep 0 (Lpa.java:52-58): label = self id, everyone sends.
         state = graph.vertices().select(
             "vid", F.col("vid").alias("label"), F.lit(True).alias("changed")
         )
-        state = loop.save(0, state, {"senders": graph.num_vertices()}, {"supersteps": 0})
+        return state, {"senders": graph.num_vertices()}
 
-    for s in range(start, max_supersteps):
-        t0 = time.time()
+    def step(s, state, aggs):
         senders = state.where("changed").select("vid", "label")
         msgs = adj.join(senders, "vid").select(
             F.explode("nbrs").alias("dst"), "label"
@@ -100,17 +87,7 @@ def lpa(
             )
         )
         # sender-count aggregator rides the materialization job (observe)
-        obs = Observation(f"{job_name}_s{s}")
-        observed = new_state.observe(
-            obs, F.sum(F.col("changed").cast("long")).alias("c")
-        )
-        state = loop.materialize(s, observed)
-        n_senders = int(obs.get["c"] or 0)
-        loop.commit(
-            s, {"senders": n_senders}, {"supersteps": s, "sec": time.time() - t0}
-        )
-        if n_senders == 0:
-            break
+        return new_state, {"senders": F.sum(F.col("changed").cast("long"))}
 
-    loop.cleanup()
+    state = loop.run(init, step, lambda s, aggs: not aggs["senders"])
     return state.select("vid", "label")

@@ -243,6 +243,9 @@ def aviator_to_sql(expr: str, ns_map: dict[str, Callable[[str], str]]) -> str:
             body = tok[1:-1]
             if "'" in body:
                 raise ValueError(f"embedded quote in literal: {tok!r}")
+            # doubled for Spark's unescaping parser, as in the =~ branch
+            # below; duckdb_dialect undoes it
+            body = body.replace("\\", "\\\\")
             out.append(f"'{body}'")
         elif m.lastgroup == "ident":
             low = tok.lower()

@@ -26,19 +26,15 @@ difference between O(E·diameter) and O(Σ frontier degrees) messages.
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 from hugegraph_computer_spark.graph.graph import Graph
-from hugegraph_computer_spark.graph.scatter import fits, scatter_min
 
 
 def wcc(
     graph: Graph,
     max_supersteps: int = 100,
-    kernel: str = "sql",
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
     job_name: str = "wcc",
@@ -52,21 +48,8 @@ def wcc(
         resume=resume,
     )
     adj = graph.adjacency()
-    if kernel not in ("sql", "arrow", "auto"):
-        raise ValueError(f"wcc: unknown kernel {kernel!r}")
-    use_arrow = kernel == "arrow" or (kernel == "auto" and fits(graph.max_vid()))
 
-    start = 1
-    state = None
-    if resume:
-        resumed = loop.resume()
-        if resumed is not None:
-            s, state, aggs = resumed
-            if aggs.get("changed", 1) == 0:
-                return state.select("vid", F.col("label").alias("component"))
-            start = s + 1
-
-    if state is None:
+    def init():
         # superstep 0 (Wcc.java:47-60): label = min(self, neighbors).
         nbr_min = (
             adj.select("vid", F.array_min("nbrs").alias("m"))
@@ -88,22 +71,16 @@ def wcc(
                 F.lit(True).alias("changed"),
             )
         )
-        state = loop.save(0, state, {"changed": graph.num_vertices()}, {"supersteps": 0})
+        return state, {"changed": graph.num_vertices()}
 
-    for s in range(start, max_supersteps):
-        t0 = time.time()
+    def step(s, state, aggs):
         frontier = state.where("changed").select("vid", "label")
-        joined = adj.join(frontier, "vid")
-        if use_arrow:
-            msgs = scatter_min(
-                joined.select("vid", "nbrs", "label"), graph.max_vid()
-            ).groupBy("dst").agg(F.min("msg").alias("msg"))
-        else:
-            msgs = (
-                joined.select(F.explode("nbrs").alias("dst"), "label")
-                .groupBy("dst")
-                .agg(F.min("label").alias("msg"))
-            )
+        msgs = (
+            adj.join(frontier, "vid")
+            .select(F.explode("nbrs").alias("dst"), "label")
+            .groupBy("dst")
+            .agg(F.min("label").alias("msg"))
+        )
         new_state = (
             state.join(msgs, state["vid"] == msgs["dst"], "left")
             .select(
@@ -120,17 +97,7 @@ def wcc(
             )
         )
         # changed-count aggregator rides the materialization job (observe)
-        obs = Observation(f"{job_name}_s{s}")
-        observed = new_state.observe(
-            obs, F.sum(F.col("changed").cast("long")).alias("c")
-        )
-        state = loop.materialize(s, observed)
-        changed = int(obs.get["c"] or 0)
-        loop.commit(
-            s, {"changed": changed}, {"supersteps": s, "sec": time.time() - t0}
-        )
-        if changed == 0:
-            break
+        return new_state, {"changed": F.sum(F.col("changed").cast("long"))}
 
-    loop.cleanup()
+    state = loop.run(init, step, lambda s, aggs: not aggs["changed"])
     return state.select("vid", F.col("label").alias("component"))

@@ -146,27 +146,6 @@ def test_determinism(spark):
         assert r1[v] == pytest.approx(r2[v], abs=1e-12)
 
 
-def test_pagerank_arrow_kernel_equivalent(spark):
-    edges = random_edges(300, 1200, seed=13)
-    df = spark.createDataFrame(edges, "src long, dst long")
-    g = Graph.from_edges(df, num_partitions=8)
-    a = df_to_dict(pagerank(g, l1_threshold=1e-6, kernel="sql", job_name="pk_sql"),
-                   "vid", "rank")
-    b = df_to_dict(pagerank(g, l1_threshold=1e-6, kernel="arrow", job_name="pk_arrow"),
-                   "vid", "rank")
-    for v in a:
-        assert a[v] == pytest.approx(b[v], abs=1e-12)
-
-
-def test_wcc_arrow_kernel_equivalent(spark):
-    edges = random_edges(250, 700, seed=17)
-    df = spark.createDataFrame(edges, "src long, dst long")
-    g = Graph.from_edges(df, num_partitions=8)
-    a = df_to_dict(wcc(g, kernel="sql", job_name="w_sql"), "vid", "component")
-    b = df_to_dict(wcc(g, kernel="arrow", job_name="w_arrow"), "vid", "component")
-    assert a == b
-
-
 def test_triangle_oriented_matches_intersect(spark):
     g = make_graph(spark, F2_EDGES, drop_self_loops=True)
     assert df_to_dict(triangle_count(g, algorithm="oriented"), "vid", "triangles") \

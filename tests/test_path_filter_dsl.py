@@ -46,6 +46,28 @@ def test_aviator_reference_expressions():
     )
 
 
+def test_aviator_backslash_literal_agrees_across_engines(spark):
+    """A plain string literal with a backslash compares equal to the same
+    raw text in Spark and in DuckDB (Spark's parser unescapes ``\\d``)."""
+    import duckdb
+    import pandas as pd
+
+    from hugegraph_computer_spark.operators.path_filter import duckdb_dialect
+
+    rows = pd.DataFrame({"s": ["a\\d", "ad"]})
+    sql = aviator_to_sql("$element.s == 'a\\d'", _E)
+    got_duck = [
+        r[0] for r in duckdb.sql(
+            f"SELECT ({duckdb_dialect(sql)}) FROM rows ORDER BY s"
+        ).fetchall()
+    ]
+    got_spark = [
+        r[0] for r in spark.createDataFrame(rows).orderBy("s")
+        .selectExpr(sql).collect()
+    ]
+    assert got_spark == got_duck == [True, False], sql
+
+
 def test_aviator_rejects_unsafe_or_unsupported():
     for bad in [
         "$foo.x == 1",            # unknown namespace

@@ -15,7 +15,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from hugegraph_computer_spark.graph.graph import Graph
-from hugegraph_computer_spark.operators import lpa, pagerank, wcc
+from hugegraph_computer_spark.operators import (
+    coreness,
+    lpa,
+    pagerank,
+    personalized_pagerank,
+    wcc,
+)
 from hugegraph_computer_spark.plans.checks import (
     assert_no_cartesian,
     assert_pushed_filters,
@@ -74,6 +80,8 @@ def test_corpus_scan_prunes_columns(spark, testdata_dir):
     (pagerank, {"l1_threshold": 1e-6, "max_supersteps": 10}, "rank"),
     (wcc, {}, "component"),
     (lpa, {}, "label"),
+    (coreness, {}, "coreness"),
+    (personalized_pagerank, {"sources": [0, 7]}, "rank"),
 ])
 def test_resume_identical_after_partial_checkpoint(spark, tmp_path, algo, kw, col):
     g = make_graph(spark, random_edges(80, 240, seed=4))
@@ -86,6 +94,28 @@ def test_resume_identical_after_partial_checkpoint(spark, tmp_path, algo, kw, co
     shutil.rmtree(os.path.join(ck, job, steps[-1]))
     resumed = df_to_dict(algo(g, checkpoint_dir=ck, resume=True, **kw), "vid", col)
     assert resumed == full
+
+
+def test_pagerank_stats_out_filled_when_resume_finds_finished_run(spark, tmp_path):
+    """A resume that finds the run already finished still reports the
+    supersteps it reached, the final L1 and an empty history."""
+    g = make_graph(spark, random_edges(60, 180, seed=5))
+    ck = str(tmp_path)
+    first: dict = {}
+    full = df_to_dict(
+        pagerank(g, l1_threshold=1e-6, checkpoint_dir=ck, stats_out=first),
+        "vid", "rank",
+    )
+    again: dict = {}
+    resumed = df_to_dict(
+        pagerank(g, l1_threshold=1e-6, checkpoint_dir=ck, resume=True,
+                 stats_out=again),
+        "vid", "rank",
+    )
+    assert resumed == full
+    assert again["supersteps"] == first["supersteps"]
+    assert again["l1"] == first["l1"]
+    assert again["history"] == []
 
 
 def test_snapshot_meta_carries_lineage_and_aggregates(spark, tmp_path):

@@ -91,6 +91,38 @@ def test_hub_neighborhood_sample_matches_flat_rank(spark, hub_graph):
     assert got == sorted(e[0] for e in expected)
 
 
+def test_hub_neighborhood_sample_dedups_duplicate_across_chunks(spark):
+    """On a multigraph a parallel edge whose two copies straddle a chunk
+    boundary must fill one fanout slot, not two: the hub merge equals
+    the flat top-fanout over the DISTINCT neighbors."""
+    from hugegraph_computer_spark.operators import neighborhood_sample
+
+    n = DEFAULT_ADJ_CHUNK + 900
+    dup = DEFAULT_ADJ_CHUNK  # sorted positions chunk-1 and chunk: straddles
+    edges = spark.createDataFrame(
+        [(0, d) for d in range(1, n + 1)] + [(0, dup)], "src long, dst long"
+    )
+    g = Graph.from_edges(edges, symmetrize=False, edge_freq="multiple")
+    chunks = g.adjacency(keep_chunk_no=True).where(F.col("vid") == 0).collect()
+    assert sorted(dup in r["nbrs"] for r in chunks) == [True, True]
+
+    def rank(d):
+        return int(hashlib.md5(f"gnn:1:0:{d}".encode()).hexdigest()[:15], 16)
+
+    def pos(nbrs):  # dup's place in its chunk's rank order
+        return sorted(set(nbrs), key=lambda d: (rank(d), d)).index(dup)
+
+    # dup's global place is the sum; one slot past it keeps dup among
+    # BOTH chunks' candidates with a slot left that a second copy of it
+    # would take
+    fanout = sum(pos(r["nbrs"]) for r in chunks) + 2
+    roots = spark.createDataFrame([(0,)], "root long")
+    got = [r["dst"] for r in neighborhood_sample(
+        g, fanouts=(fanout,), roots=roots).collect()]
+    expected = sorted(range(1, n + 1), key=lambda d: (rank(d), d))[:fanout]
+    assert sorted(got) == sorted(expected)
+
+
 # ------------------------- CLI corpus-mode decode for walk outputs
 
 

@@ -78,29 +78,20 @@ def measured_run(cpus: int) -> dict:
 
     spark = get_spark(
         master=f"local[{cpus}]", app_name=f"scaling-{cpus}", shuffle_partitions=cpus,
-        extra_conf={
-            "spark.python.worker.faulthandler.enabled": "true",
-            "spark.python.worker.reuse": os.environ.get("SPARK_WORKER_REUSE", "true"),
-        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     edges = spark.read.parquet(EDGES_PATH)
     g = Graph.from_edges(edges, symmetrize=False, dedup=False, num_partitions=cpus)
-    kernel = os.environ.get("SPARK_GRAFT_KERNEL", "sql")
-    # warmup (untimed): materialize the kernel's cached edge structure
+    # warmup (untimed): materialize the cached adjacency
     n = g.num_vertices()
-    if kernel == "arrow":
-        g.flat_edges().count()
-    else:
-        g.adjacency().count()
+    g.adjacency().count()
     sym_edges = g.edges.count()
     t0 = time.time()
-    pagerank(g, l1_threshold=-1.0, max_supersteps=SUPERSTEPS, kernel=kernel).count()
+    pagerank(g, l1_threshold=-1.0, max_supersteps=SUPERSTEPS).count()
     dt = time.time() - t0
     spark.stop()
     return {
         "cpus": cpus,
-        "kernel": kernel,
         "vertices": n,
         "sym_edges": sym_edges,
         "supersteps": SUPERSTEPS,

@@ -63,7 +63,13 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(master="local[8]", app_name="check-correctness", shuffle_partitions=16)
+    # sys.path above reaches only this process: ship the repo root to the
+    # Python workers too, or every pandas-UDF query fails to import the
+    # package when the caller's PYTHONPATH lacks it
+    spark = get_spark(
+        master="local[8]", app_name="check-correctness", shuffle_partitions=16,
+        extra_conf={"spark.executorEnv.PYTHONPATH": str(REPO)},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
