@@ -8,11 +8,19 @@ driver IS the master, and global aggregators are a single ``agg().collect()``
 per superstep (the reference exchanges them over RPC,
 aggregator/WorkerAggrManager.java:89-141).
 
-``SuperstepLoop.run(init, step, halt)`` is that master loop, once, for every
-full-state operator (pagerank, personalized_pagerank, wcc, lpa, coreness,
-``graph.program.run_program``): each operator supplies only its superstep-0
-plan, its per-superstep plan with the aggregators to observe, and its stop
-rule.
+That master loop exists once, in two drivers:
+
+* ``SuperstepLoop.run(init, step, halt)`` for every full-state operator
+  (pagerank, personalized_pagerank, wcc, lpa, coreness, weighted
+  closeness, ``graph.program.run_program``): each operator supplies only
+  its superstep-0 plan, its per-superstep plan with the aggregators to
+  observe, and its stop rule;
+* ``SuperstepLoop.flood(init, step, record)`` for every replay-resume
+  flood (rings, rings with filter, links, random and node2vec walks,
+  unweighted closeness, the forward BFS of betweenness): each operator
+  supplies only its superstep-0 frontier and its per-superstep plan; the
+  flood records per-superstep results and stops at the first empty
+  frontier.
 
 What the reference left as a TODO — resume (MasterService.java:213, 316-322)
 — is implemented here for real, per the north rule:
@@ -24,6 +32,8 @@ What the reference left as a TODO — resume (MasterService.java:213, 316-322)
 * ``SuperstepLoop.resume()`` finds the latest *complete* snapshot (the meta
   file is written after the parquet commit, so a job killed mid-write
   resumes from the previous superstep) and the algorithm continues from it;
+  a flood, whose result is every superstep's record, resumes from the
+  contiguous prefix instead (``resume_steps``);
 * reading the snapshot back also breaks Catalyst's plan lineage — without
   this, an iterative DataFrame program re-analyzes an exponentially growing
   plan (SURVEY.md §4). When no checkpoint dir is configured we break lineage
@@ -46,8 +56,13 @@ import shutil
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+
+#: non-durable state generations kept pinned: the current one and the one
+#: it was derived from
+RELEASE_WINDOW = 2
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -65,6 +80,33 @@ def release_local_checkpoint(df: DataFrame) -> None:
             df.unpersist()
         except Exception:
             pass
+
+
+class RolledUnion:
+    """The union of a growing list of frames (a flood's records), kept as
+    ONE rolled ``localCheckpoint``: ``extend`` materializes the current
+    generation ∪ the frames added since, then releases the superseded
+    generation — at most two generations are pinned, and each superstep
+    traverses one frame instead of re-unioning every record."""
+
+    def __init__(self, *cols: str):
+        self.cols = cols
+        self.df: DataFrame | None = None
+        self._n = 0
+
+    def extend(self, frames: list[DataFrame]) -> DataFrame:
+        new = [f.select(*self.cols) for f in frames[self._n:]]
+        if new:
+            prev = [] if self.df is None else [self.df]
+            out = reduce(DataFrame.unionByName, prev + new).localCheckpoint(eager=True)
+            self.release()
+            self.df, self._n = out, len(frames)
+        return self.df
+
+    def release(self) -> None:
+        if self.df is not None:
+            release_local_checkpoint(self.df)
+            self.df = None
 
 
 @dataclass
@@ -85,7 +127,6 @@ class SuperstepLoop:
         max_supersteps: int = 10,
         checkpoint_every: int = 1,
         snapshot_format: str = "parquet",
-        release_window: int | None = 2,
         resume: bool = False,
     ):
         self.spark = spark
@@ -100,11 +141,6 @@ class SuperstepLoop:
             shutil.rmtree(self.dir)
         self.max_supersteps = max_supersteps
         self.checkpoint_every = max(1, checkpoint_every)
-        # how many non-durable localCheckpoints to keep pinned: 2 suffices
-        # for full-state algorithms (current + previous); None = keep ALL,
-        # for delta-layout algorithms whose state is the union of every
-        # superstep's frame (closeness unweighted) — released in cleanup()
-        self.release_window = release_window
         # The snapshot writer is a FORMAT SEAM, not a hardcoded call: every
         # durable write/read goes through .format(snapshot_format) — on a
         # cluster with the Iceberg runtime jar, snapshot_format="iceberg"
@@ -115,7 +151,8 @@ class SuperstepLoop:
         self.snapshot_format = snapshot_format
         self._resume = resume
         self.history: list[SuperstepRecord] = []
-        self._persisted: list[DataFrame] = []
+        self._persisted: list[DataFrame] = []  # rolling state generations
+        self._kept: list[DataFrame] = []  # flood records, pinned to cleanup
         # set by run(): the last superstep reached and its aggregates
         self.superstep: int | None = None
         self.aggregates: dict = {}
@@ -168,6 +205,80 @@ class SuperstepLoop:
         self.superstep, self.aggregates = s, aggs
         return state
 
+    def flood(
+        self,
+        init: Callable[[], DataFrame | tuple[DataFrame, DataFrame]],
+        step: Callable[
+            [int, DataFrame, list[DataFrame]], DataFrame | tuple[DataFrame, DataFrame]
+        ],
+        record: SuperstepLoop | None = None,
+    ) -> list[DataFrame]:
+        """Drive a flood and return its records in superstep order.
+
+        * ``init()`` builds the superstep-0 frontier; it runs only when
+          there is nothing to resume from.
+        * ``step(s, frontier, records)`` builds superstep ``s``'s frontier
+          from the last one; ``records`` holds the records so far.
+
+        Without ``record`` every non-empty frontier is itself the record
+        (walk positions, BFS levels, settled deltas). With ``record`` —
+        the loop that snapshots the results — ``step`` returns
+        ``(frontier, delta)`` and ``init`` may return one too; the delta
+        is written before the frontier commit, so a kill in between
+        replays the superstep. Resume continues from the deepest
+        superstep whose frontier and every record up to it lie on disk
+        without a gap; everything past it is discarded and recomputed.
+        The flood stops at the first empty frontier (its snapshot is
+        discarded) or after superstep ``max_supersteps - 1``. Records that
+        are not durable stay pinned until ``cleanup(keep_last=False)``."""
+        # a frontier that is its own record stays pinned; one that is not
+        # joins the rolling window
+        pin = self._kept if record is None else None
+        steps = self.resume_steps() if self._resume else []
+        last = steps[-1] if steps else -1
+        if record is not None and steps:
+            first = self._meta(0)["aggregates"]["records_from"]
+            last = min(last, first - 1 + len(record.resume_steps(first)))
+            records = [record.read_step(k) for k in range(first, last + 1)]
+            for loop in (self, record):
+                for k in loop.completed_steps():
+                    if k > last:
+                        loop.discard_step(k)
+        else:
+            records = [self.read_step(k) for k in steps]
+        if last >= 0:
+            frontier = self.read_step(last)
+        else:
+            out = init()
+            frontier, delta = out if isinstance(out, tuple) else (out, None)
+            if delta is not None:
+                records.append(record.save(0, delta, {}, pinned=self._kept))
+            aggs = {} if record is None else {"records_from": int(delta is None)}
+            frontier = self.save(0, frontier, aggs, {"supersteps": 0}, pin)
+            if record is None:
+                records.append(frontier)
+            last = 0
+        for s in range(last + 1, self.max_supersteps):
+            t0 = time.time()
+            out = step(s, frontier, records)
+            if record is not None:
+                out, delta = out
+                records.append(record.save(s, delta, {}, pinned=self._kept))
+            obs = Observation(f"{self.job_name}_s{s}")
+            frontier = self.materialize(
+                s, out.observe(obs, F.count(F.lit(1)).alias("n")), pin
+            )
+            n = int(obs.get["n"] or 0)
+            if n == 0:
+                self.discard_step(s)
+                break
+            if record is None:
+                records.append(frontier)
+            self.commit(
+                s, {"in_flight": n}, {"supersteps": s, "step_sec": time.time() - t0}
+            )
+        return records
+
     # ------------------------------------------------------------- snapshot
     def _step_dir(self, superstep: int) -> str:
         return os.path.join(self.dir, f"superstep={superstep}")
@@ -180,13 +291,17 @@ class SuperstepLoop:
             superstep % self.checkpoint_every == 0 or superstep >= self.max_supersteps
         )
 
-    def materialize(self, superstep: int, state: DataFrame) -> DataFrame:
+    def materialize(
+        self, superstep: int, state: DataFrame, pinned: list[DataFrame] | None = None
+    ) -> DataFrame:
         """Materialize this superstep's state exactly once and return a
         lineage-free handle. This is THE single action per superstep —
         algorithms attach their global aggregators to the plan with
         ``DataFrame.observe`` so the aggregate ride-along costs no extra
         job (the reference ships partial aggregators with the compute
-        pass the same way, WorkerAggrManager.java:89-141)."""
+        pass the same way, WorkerAggrManager.java:89-141). A non-durable
+        frame joins ``pinned`` when given, else the rolling window of
+        ``RELEASE_WINDOW`` generations."""
         self._pending_metrics = {}
         if self._durable(superstep):
             path = self._step_dir(superstep)
@@ -207,12 +322,12 @@ class SuperstepLoop:
         else:
             # lineage break without durable write
             out = state.localCheckpoint(eager=True)
-            self._persisted.append(out)
-            if (
-                self.release_window is not None
-                and len(self._persisted) > self.release_window
-            ):
-                release_local_checkpoint(self._persisted.pop(0))
+            if pinned is not None:
+                pinned.append(out)
+            else:
+                self._persisted.append(out)
+                if len(self._persisted) > RELEASE_WINDOW:
+                    release_local_checkpoint(self._persisted.pop(0))
         return out
 
     def commit(
@@ -238,18 +353,21 @@ class SuperstepLoop:
         self.history.append(record)
 
     def save(
-        self, superstep: int, state: DataFrame, aggregates: dict, metrics: dict | None = None
+        self,
+        superstep: int,
+        state: DataFrame,
+        aggregates: dict,
+        metrics: dict | None = None,
+        pinned: list[DataFrame] | None = None,
     ) -> DataFrame:
         """materialize + commit in one call (aggregates already known)."""
-        out = self.materialize(superstep, state)
+        out = self.materialize(superstep, state, pinned)
         self.commit(superstep, aggregates, metrics)
         return out
 
     def completed_steps(self) -> list[int]:
         """All supersteps with a COMPLETE durable snapshot (meta present),
-        ascending. Path-flood algorithms persist per-superstep result
-        DELTAS alongside the in-flight state; resume replays every delta
-        ≤ the latest state snapshot (operators/rings.py, links.py)."""
+        ascending."""
         if not self.dir or not os.path.isdir(self.dir):
             return []
         out = []
@@ -260,29 +378,17 @@ class SuperstepLoop:
                     out.append(s)
         return sorted(out)
 
-    def contiguous_steps(self, start: int = 0) -> list[int]:
-        """``completed_steps()`` restricted to the contiguous prefix
-        ``start, start+1, ...`` — algorithms whose resume REPLAYS every
-        step (delta layouts, Brandes levels) must never pair
-        non-adjacent supersteps; a gap means a corrupt/mixed checkpoint
-        dir and everything past it is unusable."""
-        out = []
-        expect = start
-        for s in self.completed_steps():
-            if s != expect:
-                break
-            out.append(s)
-            expect += 1
-        return out
-
     def resume_steps(self, start: int = 0) -> list[int]:
-        """Usable steps for replay-style resume: the contiguous prefix,
-        with anything past a gap DISCARDED from disk (non-contiguous
-        steps mean a corrupt/mixed checkpoint dir; silently pairing
+        """Usable steps for replay-style resume: the contiguous prefix
+        ``start, start+1, ...``, with anything past a gap DISCARDED from
+        disk (a gap means a corrupt/mixed checkpoint dir; silently pairing
         non-adjacent supersteps would corrupt the algorithm state)."""
-        usable = self.contiguous_steps(start)
-        for s in self.completed_steps()[len(usable):]:
-            self.discard_step(s)
+        usable: list[int] = []
+        for s in self.completed_steps():
+            if s == start + len(usable):
+                usable.append(s)
+            else:
+                self.discard_step(s)
         return usable
 
     def read_step(self, superstep: int) -> DataFrame:
@@ -315,21 +421,26 @@ class SuperstepLoop:
                     best = s
         if best < 0:
             return None
-        with open(self._meta_path(best)) as f:
-            meta = json.load(f)
-        state = self.spark.read.format(self.snapshot_format).load(self._step_dir(best))
-        aggs = _unjsonable(meta["aggregates"])
-        return best, state, aggs
+        aggs = _unjsonable(self._meta(best)["aggregates"])
+        return best, self.read_step(best), aggs
+
+    def _meta(self, superstep: int) -> dict:
+        with open(self._meta_path(superstep)) as f:
+            return json.load(f)
 
     def cleanup(self, keep_last: bool = True) -> None:
         """Release the loop's pinned checkpoint blocks. The most recent
-        frame is kept by default because operators return DataFrames
-        derived from it (a released local checkpoint cannot recompute);
-        callers that copied their result out pass ``keep_last=False``."""
-        tail = self._persisted[:-1] if keep_last else self._persisted
+        frame and the flood records are kept by default because operators
+        return DataFrames derived from them (a released local checkpoint
+        cannot recompute); callers that copied their result out pass
+        ``keep_last=False``."""
+        if keep_last:
+            tail, self._persisted = self._persisted[:-1], self._persisted[-1:]
+        else:
+            tail, self._persisted = self._persisted + self._kept, []
+            self._kept = []
         for df in tail:
             release_local_checkpoint(df)
-        self._persisted = self._persisted[-1:] if keep_last else []
 
 
 def _jsonable(d: dict) -> dict:

@@ -20,9 +20,13 @@ job per BFS level (the per-level barrier IS Brandes' ordering guarantee):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from hugegraph_computer_spark.graph.bsp import SuperstepLoop, release_local_checkpoint
+from hugegraph_computer_spark.graph.bsp import (
+    RolledUnion,
+    SuperstepLoop,
+    release_local_checkpoint,
+)
 from hugegraph_computer_spark.graph.graph import Graph
 
 
@@ -63,76 +67,29 @@ def betweenness_centrality(
         src_set = graph.vertices()
 
     # ---------------------------------------------------------- forward BFS
-    ckpts: list[DataFrame] = []  # every pinned frame, released before return
+    # the visited set of every source, rolled forward one level at a time
+    seen = RolledUnion("source", "vid")
 
-    def ck(df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint(eager=True)
-        ckpts.append(out)
-        return out
-
-    def level_mat(d: int, df: DataFrame) -> DataFrame:
-        """Materialize one BFS level: durable snapshot (parquet read-back,
-        nothing pinned) when a checkpoint dir is set, localCheckpoint
-        otherwise. Either way this is the single action whose job fires
-        the level's observe()."""
-        if checkpoint_dir is not None:
-            return loop.save(d, df, {})
-        return ck(df)
-
-    def roll_seen(prev: DataFrame | None, new_seen: DataFrame) -> DataFrame:
-        """Materialize the next cumulative visited-set generation and
-        release the superseded one — keeping every generation pinned
-        (the pre-r3 behavior) holds O(depth·k·V) cached rows; rolling
-        bounds it to two generations."""
-        out = new_seen.localCheckpoint(eager=True)
-        if prev is not None:
-            release_local_checkpoint(prev)
-        return out
-
-    # contiguous prefix only: the backward sweep indexes levels[d]/[d+1]
-    # positionally, so a gap (stale steps from a prior run) must never be
-    # silently bridged — resume_steps discards everything past a gap
-    restored = loop.resume_steps() if resume else []
-    if restored:
-        levels = [loop.read_step(d) for d in restored]
-        frontier = levels[-1]
-        seen_all = levels[0].select("source", "vid")
-        for lv in levels[1:]:
-            seen_all = seen_all.unionByName(lv.select("source", "vid"))
-        seen = roll_seen(None, seen_all)
-        depth = restored[-1]
-    else:
-        frontier = level_mat(0, src_set.select(
-            F.col("vid").alias("source"), F.col("vid"),
-            F.lit(0).alias("d"), F.lit(1.0).alias("sigma"),
-        ))
-        levels = [frontier]
-        seen = roll_seen(None, frontier.select("source", "vid"))
-        depth = 0
-    while depth < max_depth:
-        depth += 1
-        # frontier size rides the materialization job (observe fires on
-        # the eager action) — no separate isEmpty action per level
-        obs = Observation(f"{job_name}_fwd{depth}")
-        nxt = level_mat(
-            depth,
+    def step(depth: int, frontier: DataFrame, levels: list[DataFrame]) -> DataFrame:
+        return (
             frontier.join(edges, frontier["vid"] == edges["src"])
             .select("source", F.col("dst").alias("vid"), "sigma")
-            .join(seen, ["source", "vid"], "left_anti")
+            .join(seen.extend(levels), ["source", "vid"], "left_anti")
             .groupBy("source", "vid")
             .agg(F.sum("sigma").alias("sigma"))
             .select("source", "vid", F.lit(depth).alias("d"), "sigma")
-            .observe(obs, F.count(F.lit(1)).alias("n")),
         )
-        if int(obs.get["n"] or 0) == 0:
-            # drop the empty level: the sweep keys off the deepest
-            # NON-empty level, and resume must not restore an empty one
-            loop.discard_step(depth)
-            break
-        levels.append(nxt)
-        seen = roll_seen(seen, seen.unionByName(nxt.select("source", "vid")))
-        frontier = nxt
-    release_local_checkpoint(seen)  # the sweep needs only the levels
+
+    # the sweep keys off the deepest level: the flood never keeps an
+    # empty one, and resumes only from a contiguous prefix of levels
+    levels = loop.flood(
+        lambda: src_set.select(
+            F.col("vid").alias("source"), F.col("vid"),
+            F.lit(0).alias("d"), F.lit(1.0).alias("sigma"),
+        ),
+        step,
+    )
+    seen.release()  # the sweep needs only the levels
 
     # --------------------------------------------------------- backward sweep
     # delta starts at 0 on the deepest layer; walk levels upward. Each
@@ -141,6 +98,13 @@ def betweenness_centrality(
     # ONCE after the sweep: the r2 version re-shuffled a cumulative O(V)
     # accumulator per level (union+groupBy inside the loop — VERDICT r2
     # wrong #4); the final union re-reads only cached level frames.
+    ckpts: list[DataFrame] = []  # every pinned frame, released before return
+
+    def ck(df: DataFrame) -> DataFrame:
+        out = df.localCheckpoint(eager=True)
+        ckpts.append(out)
+        return out
+
     parts: list[DataFrame] = []  # per-level (source, vid, delta), cached
     delta = ck(levels[-1].select("source", "vid", F.lit(0.0).alias("delta")))
     for d in range(len(levels) - 2, 0, -1):
@@ -186,4 +150,5 @@ def betweenness_centrality(
     final = result.localCheckpoint(eager=True)
     for df in ckpts:
         release_local_checkpoint(df)
+    loop.cleanup(keep_last=False)
     return final

@@ -26,9 +26,9 @@ check — exactly like the reference, the superstep cap bounds the flood.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from hugegraph_computer_spark.graph.bsp import SuperstepLoop, release_local_checkpoint
+from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 from hugegraph_computer_spark.graph.graph import Graph
 
 
@@ -76,13 +76,6 @@ def links(
     * ``edge_id_col`` — name of an edge column holding the edge id; the
       output gains ``edge_path`` (the LinksValue edge-id chain), one row
       per distinct chain under parallel edges."""
-    spark = graph.edges.sparkSession
-    loop_paths = SuperstepLoop(
-        spark, f"{job_name}_paths", checkpoint_dir, max_supersteps, resume=resume
-    )
-    loop_out = SuperstepLoop(
-        spark, f"{job_name}_out", checkpoint_dir, max_supersteps, resume=resume
-    )
     edges = graph.flat_edges(all_cols=True, build_hash=True)  # cached static join side
     carry = list(carry_props)
     missing = [p for p in carry if p not in edges.columns]
@@ -113,26 +106,7 @@ def links(
             df.where(~F.coalesce(c, F.lit(False))).select(*keep),
         )
 
-    deltas: list[DataFrame] = []
-    local_deltas: list[DataFrame] = []
-    start_s = 1
-    state = loop_paths.resume() if resume else None
-
-    def record(s: int, delta: DataFrame) -> None:
-        if checkpoint_dir is not None:
-            deltas.append(loop_out.save(s, delta, {}))
-        else:
-            d = delta.localCheckpoint(eager=True)
-            local_deltas.append(d)
-            deltas.append(d)
-
-    if state is not None:
-        s0, paths, _ = state
-        start_s = s0 + 1
-        for k in loop_out.completed_steps():
-            if k <= s0:
-                deltas.append(loop_out.read_step(k))
-    else:
+    def init() -> tuple[DataFrame, DataFrame]:
         # Links.compute0 early-returns when vertex.edges().size()==0 BEFORE
         # the end-vertex check (Links.java compute0), so an isolated start
         # vertex never records [self]; the semi-join against edge sources
@@ -153,17 +127,15 @@ def links(
         # a start vertex that is itself an end vertex records [self] and
         # stops (compute0 -> isEndVertexAndSaveValue short-circuit)
         ended0, live = vsplit(start, end_vertex_cond)
-        record(0, ended0)
         live = live.select(
             *with_edge_path("vid", "path"),
             # no previous edge on the first hop — NULL in_* (only
             # spread_cond0 ever sees these rows)
             *[F.lit(None).cast(edge_dtypes[p]).alias(f"in_{p}") for p in carry],
         )
-        paths = loop_paths.materialize(0, live)
-        loop_paths.commit(0, {})
+        return live, ended0
 
-    for s in range(start_s, max_supersteps):
+    def step(s: int, paths: DataFrame, _out) -> tuple[DataFrame, DataFrame]:
         stepped = paths.join(edges, paths["vid"] == edges["src"]).select(
             edges["src"], edges["dst"],
             *[edges[c] for c in edges.columns if c not in ("src", "dst")],
@@ -206,19 +178,18 @@ def links(
         )
         # end-vertex: record at the arriving vertex; others stay live
         vertex_ended, live = vsplit(moved, end_vertex_cond)
-        record(s, edge_ended.unionByName(
+        return live, edge_ended.unionByName(
             vertex_ended.select(*with_edge_path("vid", "path"))
-        ))
-        obs = Observation(f"{job_name}_s{s}")
-        paths = loop_paths.materialize(
-            s, live.observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        n = int(obs.get["n"] or 0)
-        if n == 0:
-            loop_paths.discard_step(s)  # keep s-1 as the resume point
-            break
-        loop_paths.commit(s, {"in_flight": n})
 
+    spark = graph.edges.sparkSession
+    loop = SuperstepLoop(
+        spark, f"{job_name}_paths", checkpoint_dir, max_supersteps, resume=resume
+    )
+    found = SuperstepLoop(
+        spark, f"{job_name}_out", checkpoint_dir, max_supersteps, resume=resume
+    )
+    deltas = loop.flood(init, step, record=found)
     schema = "vid long, path array<long>"
     if edge_id_col:
         schema += f", edge_path array<{eid_type}>"
@@ -226,10 +197,7 @@ def links(
     for d in deltas:
         results = results.unionByName(d)
     out = results.localCheckpoint(eager=True)
-    for d in local_deltas:
-        release_local_checkpoint(d)
-    loop_paths.cleanup(keep_last=False)
-    loop_out.cleanup(keep_last=False)
+    loop.cleanup(keep_last=False)
     return out
 
 

@@ -29,9 +29,11 @@ motif-mining graphs and so do we — ``max_ring_length`` caps the walk depth
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from collections.abc import Callable
 
-from hugegraph_computer_spark.graph.bsp import SuperstepLoop, release_local_checkpoint
+from pyspark.sql import DataFrame, functions as F
+
+from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 from hugegraph_computer_spark.graph.graph import Graph
 
 
@@ -55,14 +57,9 @@ def rings_detection(
     delta is written before its superstep's path commit, so a kill at any
     point resumes from the last complete superstep with every earlier
     delta intact and replays at most one superstep (idempotent
-    overwrite). ``resume=True`` continues from the latest snapshot."""
-    spark = graph.edges.sparkSession
-    loop_paths = SuperstepLoop(
-        spark, f"{job_name}_paths", checkpoint_dir, max_supersteps, resume=resume
-    )
-    loop_rings = SuperstepLoop(
-        spark, f"{job_name}_rings", checkpoint_dir, max_supersteps, resume=resume
-    )
+    overwrite). ``resume=True`` continues from the deepest superstep
+    whose paths and every ring delta up to it are on disk without a gap
+    (``SuperstepLoop.flood``)."""
     # spread_cond ≈ RingsDetectionWithFilter's property-filter DSL
     # (rings/filter/RingsDetectionWithFilter.java): a SQL boolean over the
     # edge columns gating every send, superstep 0 included. The filter and
@@ -74,80 +71,71 @@ def rings_detection(
         edges = edges.where(F.expr(spread_cond))
     edges = edges.select("src", "dst")
 
-    # Recorded rings accumulate as per-superstep DELTAS, each materialized
-    # exactly once and unioned at the end — O(|results|) total writes, not
-    # the O(S·|results|) of re-materializing a cumulative union per
-    # superstep. Durable deltas are parquet read-backs (nothing pinned);
-    # non-durable ones are localCheckpoints released after the final union.
-    deltas: list[DataFrame] = []
-    local_deltas: list[DataFrame] = []
-    start_s = 1
-    state = loop_paths.resume() if resume else None
-    if state is not None:
-        s0, paths, _ = state
-        start_s = s0 + 1
-        for k in loop_rings.completed_steps():
-            if k <= s0:
-                deltas.append(loop_rings.read_step(k))
-    else:
+    def init() -> DataFrame:
         # superstep 0: path [self] to every neighbor with dst >= src
-        paths = (
+        return (
             edges.where(F.col("dst") >= F.col("src"))
             .select(F.col("dst").alias("cur"), F.array(F.col("src")).alias("seq"))
         )
-        paths = loop_paths.materialize(0, paths)
-        loop_paths.commit(0, {})
 
-    for s in range(start_s, max_supersteps):
-        root = F.element_at("seq", 1)
-        closed = paths.where(F.col("cur") == root)
-        new_rings = (
-            # record iff cur is the min of the whole path
-            closed.where(F.col("cur") <= F.array_min("seq"))
-            .select(
-                F.col("cur").alias("vid"),
-                F.concat("seq", F.array(F.col("cur"))).alias("ring"),
-            )
-        )
-        if checkpoint_dir is not None:
-            d = loop_rings.save(s, new_rings, {})
-        else:
-            d = new_rings.localCheckpoint(eager=True)
-            local_deltas.append(d)
-        deltas.append(d)
-
-        fwd = paths.where(
-            (F.col("cur") != root) & ~F.array_contains("seq", F.col("cur"))
-        ).select("cur", F.concat("seq", F.array(F.col("cur"))).alias("seq"))
-        if max_ring_length is not None:
-            fwd = fwd.where(F.size("seq") < max_ring_length)
+    def step(s: int, paths: DataFrame, _rings) -> tuple[DataFrame, DataFrame]:
+        fwd, new_rings = _close_or_extend(paths, max_ring_length)
         nxt = (
             fwd.join(edges, fwd["cur"] == edges["src"])
             .where(F.col("dst") >= F.element_at("seq", 1))
             .select(F.col("dst").alias("cur"), "seq")
         )
-        # in-flight row count rides the materialization job (observe fires
-        # on the eager checkpoint) — no separate isEmpty action
-        obs = Observation(f"{job_name}_s{s}")
-        paths = loop_paths.materialize(
-            s, nxt.observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        n = int(obs.get["n"] or 0)
-        if n == 0:
-            # drop the empty frontier snapshot: superstep s-1 stays the
-            # resume point (replaying one superstep is idempotent)
-            loop_paths.discard_step(s)
-            break
-        loop_paths.commit(s, {"in_flight": n})
+        return nxt, new_rings
 
+    return _flood_rings(
+        graph, job_name, checkpoint_dir, max_supersteps, resume, init, step
+    )
+
+
+def _close_or_extend(
+    paths: DataFrame, max_ring_length: int | None, *carry: str
+) -> tuple[DataFrame, DataFrame]:
+    """Split the paths arriving at ``cur``: the ones that close a ring
+    there — recorded iff ``cur`` is the min of the whole path — and the
+    ones that extend by ``cur`` (no repeated vertex, under the length
+    cap) and travel on."""
+    root = F.element_at("seq", 1)
+    closed = paths.where(F.col("cur") == root)
+    new_rings = (
+        closed.where(F.col("cur") <= F.array_min("seq"))
+        .select(
+            F.col("cur").alias("vid"),
+            F.concat("seq", F.array(F.col("cur"))).alias("ring"),
+        )
+    )
+    fwd = paths.where(
+        (F.col("cur") != root) & ~F.array_contains("seq", F.col("cur"))
+    ).select("cur", F.concat("seq", F.array(F.col("cur"))).alias("seq"), *carry)
+    if max_ring_length is not None:
+        fwd = fwd.where(F.size("seq") < max_ring_length)
+    return fwd, new_rings
+
+
+def _flood_rings(
+    graph: Graph, job_name: str, checkpoint_dir: str | None,
+    max_supersteps: int, resume: bool, init: Callable, step: Callable,
+) -> DataFrame:
+    """Run a ring flood: in-flight paths snapshot under ``{job}_paths``,
+    each superstep's recorded rings under ``{job}_rings``. The deltas are
+    materialized once each and unioned at the end — O(|results|) writes,
+    not the O(S·|results|) of a cumulative union per superstep."""
+    spark = graph.edges.sparkSession
+    paths = SuperstepLoop(
+        spark, f"{job_name}_paths", checkpoint_dir, max_supersteps, resume=resume
+    )
+    found = SuperstepLoop(
+        spark, f"{job_name}_rings", checkpoint_dir, max_supersteps, resume=resume
+    )
     rings = spark.createDataFrame([], "vid long, ring array<long>")
-    for d in deltas:
+    for d in paths.flood(init, step, record=found):
         rings = rings.unionByName(d)
     out = rings.localCheckpoint(eager=True)
-    for d in local_deltas:
-        release_local_checkpoint(d)
-    loop_paths.cleanup(keep_last=False)
-    loop_rings.cleanup(keep_last=False)
+    paths.cleanup(keep_last=False)
     return out
 
 
@@ -183,14 +171,6 @@ def rings_detection_with_filter(
     from hugegraph_computer_spark.operators.path_filter import RingsFilter
 
     rf = RingsFilter(describe)
-    spark = graph.edges.sparkSession
-    loop_paths = SuperstepLoop(
-        spark, f"{job_name}_paths", checkpoint_dir, max_supersteps, resume=resume
-    )
-    loop_rings = SuperstepLoop(
-        spark, f"{job_name}_rings", checkpoint_dir, max_supersteps, resume=resume
-    )
-
     edges = graph.flat_edges(all_cols=True, build_hash=True)  # cached static join side
     carry = rf.carry_props
     missing = [p for p in carry if p not in edges.columns]
@@ -211,81 +191,33 @@ def rings_detection_with_filter(
             return p
         return p.join(allowed.withColumnRenamed("vid", "cur"), "cur", "left_semi")
 
-    deltas: list[DataFrame] = []
-    local_deltas: list[DataFrame] = []
-    start_s = 1
-    state = loop_paths.resume() if resume else None
-    if state is not None:
-        s0, paths, _ = state
-        start_s = s0 + 1
-        for k in loop_rings.completed_steps():
-            if k <= s0:
-                deltas.append(loop_rings.read_step(k))
-    else:
+    def init() -> DataFrame:
         e0 = edges.where(F.expr(rf.edge_cond(with_message=False)))
         if allowed is not None:
             e0 = e0.join(allowed.withColumnRenamed("vid", "src"), "src", "left_semi")
-        paths = e0.select(
+        return e0.select(
             F.col("dst").alias("cur"),
             F.array(F.col("src")).alias("seq"),
             *[F.col(p).alias(f"in_{p}") for p in carry],
         )
-        paths = loop_paths.materialize(0, paths)
-        loop_paths.commit(0, {})
 
     edge_cond_msg = rf.edge_cond(with_message=True)
-    for s in range(start_s, max_supersteps):
-        arrived = gate_arrivals(paths)
-        root = F.element_at("seq", 1)
-        closed = arrived.where(F.col("cur") == root)
-        new_rings = (
-            closed.where(F.col("cur") <= F.array_min("seq"))
-            .select(
-                F.col("cur").alias("vid"),
-                F.concat("seq", F.array(F.col("cur"))).alias("ring"),
-            )
-        )
-        if checkpoint_dir is not None:
-            d = loop_rings.save(s, new_rings, {})
-        else:
-            d = new_rings.localCheckpoint(eager=True)
-            local_deltas.append(d)
-        deltas.append(d)
 
-        fwd = arrived.where(
-            (F.col("cur") != root) & ~F.array_contains("seq", F.col("cur"))
-        ).select(
-            "cur",
-            F.concat("seq", F.array(F.col("cur"))).alias("seq"),
-            *[f"in_{p}" for p in carry],
+    def step(s: int, paths: DataFrame, _rings) -> tuple[DataFrame, DataFrame]:
+        fwd, new_rings = _close_or_extend(
+            gate_arrivals(paths), max_ring_length, *[f"in_{p}" for p in carry]
         )
-        if max_ring_length is not None:
-            fwd = fwd.where(F.size("seq") < max_ring_length)
         stepped = fwd.join(edges, fwd["cur"] == edges["src"])
         nxt = stepped.where(F.expr(edge_cond_msg)).select(
             F.col("dst").alias("cur"),
             fwd["seq"],
             *[edges[p].alias(f"in_{p}") for p in carry],
         )
-        obs = Observation(f"{job_name}_s{s}")
-        paths = loop_paths.materialize(
-            s, nxt.observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        n = int(obs.get["n"] or 0)
-        if n == 0:
-            loop_paths.discard_step(s)
-            break
-        loop_paths.commit(s, {"in_flight": n})
+        return nxt, new_rings
 
-    rings = spark.createDataFrame([], "vid long, ring array<long>")
-    for d in deltas:
-        rings = rings.unionByName(d.select("vid", "ring"))
-    out = rings.localCheckpoint(eager=True)
-    for d in local_deltas:
-        release_local_checkpoint(d)
-    loop_paths.cleanup(keep_last=False)
-    loop_rings.cleanup(keep_last=False)
-    return out
+    return _flood_rings(
+        graph, job_name, checkpoint_dir, max_supersteps, resume, init, step
+    )
 
 
 def rings_count(graph: Graph, **kw) -> DataFrame:

@@ -34,17 +34,16 @@ simply stop — the inner join drops them.
 
 With ``checkpoint_dir`` the run is resumable like the path floods: each
 superstep's walk frame is a durable delta; resume replays the contiguous
-prefix (SuperstepLoop.resume_steps) and continues from the deepest step.
+prefix and continues from the deepest step (SuperstepLoop.flood).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from collections.abc import Callable
 
-from hugegraph_computer_spark.graph.bsp import (
-    SuperstepLoop,
-    release_local_checkpoint,
-)
+from pyspark.sql import Column, DataFrame, functions as F
+
+from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 from hugegraph_computer_spark.graph.graph import Graph
 
 
@@ -76,11 +75,6 @@ def random_walks(
     ``walk_length`` steps (step 0 is the start vertex itself)."""
     if walks_per_vertex < 1 or walk_length < 0:
         raise ValueError("random_walks: walks_per_vertex >= 1, walk_length >= 0")
-    spark = graph.edges.sparkSession
-    loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, walk_length + 1, resume=resume
-    )
-
     # chunked sorted neighbor arrays (Graph.adjacency): hubs with degree
     # > chunk are split across rows, so a 10^8-degree vertex never holds
     # a multi-GB single row; chunks are consecutive slices of the
@@ -96,46 +90,7 @@ def random_walks(
         F.col("vid").alias("avid"), "chunk_no", "nbrs", "deg"
     )
 
-    frames: list[tuple[int, DataFrame]] = []
-    locals_: list[DataFrame] = []
-
-    def keep(t: int, df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            df = loop.save(t, df, {})
-        else:
-            df = df.localCheckpoint(eager=True)
-            locals_.append(df)
-        frames.append((t, df))
-        return df
-
-    start_t = 0
-    state: DataFrame | None = None
-    if resume:
-        done = loop.resume_steps()
-        for k in done:
-            frames.append((k, loop.read_step(k)))
-        if done:
-            state = frames[-1][1]
-            start_t = done[-1] + 1
-
-    if state is None:
-        wpv = walks_per_vertex
-        state = (
-            graph.vertices()
-            .select(
-                "vid",
-                F.explode(F.sequence(F.lit(0), F.lit(wpv - 1))).alias("r"),
-            )
-            .select(
-                (F.col("vid") * wpv + F.col("r")).alias("walk_id"),
-                F.col("vid").alias("start"),
-                F.col("vid"),
-            )
-        )
-        state = keep(0, state)
-        start_t = 1
-
-    for t in range(start_t, walk_length + 1):
+    def step(t: int, state: DataFrame, _frames) -> DataFrame:
         # compute the choice via withColumn BEFORE aliasing it to "vid":
         # the hash inside the index references F.col("vid"), and a select
         # that simultaneously re-binds that name can make Spark resolve
@@ -144,13 +99,14 @@ def random_walks(
         # of the vertex; the chunk_no predicate keeps exactly the chunk
         # holding the drawn global index (deg is total degree on every
         # chunk row), then element_at indexes within it — O(deg/chunk)
-        # pairs scanned per hub step, never a full-degree row
+        # pairs scanned per hub step, never a full-degree row. `div`
+        # keeps the chunk ordinal exact (see node2vec_walks)
         gidx = _choice_hash(seed, t - 1) % F.col("deg")
-        nxt = (
+        chunk_no = F.call_function("div", gidx, F.lit(chunk)).cast("int")
+        return (
             state.join(
                 adj,
-                (state["vid"] == adj["avid"])
-                & (adj["chunk_no"] == F.floor(gidx / F.lit(chunk)).cast("int")),
+                (state["vid"] == adj["avid"]) & (adj["chunk_no"] == chunk_no),
             )
             .withColumn(
                 "_next",
@@ -158,28 +114,46 @@ def random_walks(
             )
             .select("walk_id", "start", F.col("_next").alias("vid"))
         )
-        obs = Observation(f"{job_name}_s{t}")
-        state = keep(t, nxt.observe(obs, F.count(F.lit(1)).alias("n")))
-        if int(obs.get["n"] or 0) == 0:
-            # every walk hit a dead end: drop the empty frame (an empty
-            # durable step would corrupt replay-resume) and stop
-            loop.discard_step(t)
-            frames.pop()
-            break
 
+    # adj is the graph's shared cached adjacency — left persisted
+    # (Graph.unpersist releases it with the rest of the cache)
+    return _flood_walks(
+        graph, walks_per_vertex, walk_length, checkpoint_dir, resume, job_name,
+        step,
+    )
+
+
+def _flood_walks(
+    graph: Graph, wpv: int, walk_length: int, checkpoint_dir: str | None,
+    resume: bool, job_name: str, step: Callable, *seed_cols: Column,
+) -> DataFrame:
+    """Flood ``wpv`` walks from every vertex for ``walk_length`` steps
+    and union the per-step frames (one durable delta each) into the
+    output. Superstep 0 is ``(walk_id, start, *seed_cols, vid)`` with
+    walk_id = start·wpv + replica."""
+    spark = graph.edges.sparkSession
+    loop = SuperstepLoop(
+        spark, job_name, checkpoint_dir, walk_length + 1, resume=resume
+    )
+    seed = (
+        graph.vertices()
+        .select("vid", F.explode(F.sequence(F.lit(0), F.lit(wpv - 1))).alias("r"))
+        .select(
+            (F.col("vid") * wpv + F.col("r")).alias("walk_id"),
+            F.col("vid").alias("start"),
+            *seed_cols,
+            F.col("vid"),
+        )
+    )
     out = spark.createDataFrame([], "walk_id long, start long, step int, vid long")
-    for t, df in frames:
+    for t, df in enumerate(loop.flood(lambda: seed, step)):
         out = out.unionByName(
             df.select(
                 "walk_id", "start", F.lit(t).cast("int").alias("step"), "vid"
             )
         )
     out = out.localCheckpoint(eager=True)
-    for df in locals_:
-        release_local_checkpoint(df)
-    # adj is the graph's shared cached adjacency — leave it persisted
-    # (Graph.unpersist releases it with the rest of the cache)
-    loop.cleanup()
+    loop.cleanup(keep_last=False)
     return out
 
 
@@ -268,10 +242,6 @@ def node2vec_walks(
     if p <= 0 or q <= 0:
         raise ValueError("node2vec_walks: p and q must be > 0")
     w_ret, w_in, w_out = _bias_weights(p, q)
-    spark = graph.edges.sparkSession
-    loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, walk_length + 1, resume=resume
-    )
 
     # one cached neighbor-array frame serves BOTH roles: the candidate
     # source for the current vertex (joined on vid) and the d=1
@@ -292,47 +262,7 @@ def node2vec_walks(
     adj.count()
     padj = adj.select(F.col("avid").alias("pvid"), F.col("nbrs").alias("pnbrs"))
 
-    frames: list[tuple[int, DataFrame]] = []
-    locals_: list[DataFrame] = []
-
-    def keep(t: int, df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            df = loop.save(t, df, {})
-        else:
-            df = df.localCheckpoint(eager=True)
-            locals_.append(df)
-        frames.append((t, df))
-        return df
-
-    start_t = 0
-    state: DataFrame | None = None
-    if resume:
-        done = loop.resume_steps()
-        for k in done:
-            frames.append((k, loop.read_step(k)))
-        if done:
-            state = frames[-1][1]
-            start_t = done[-1] + 1
-
-    if state is None:
-        wpv = walks_per_vertex
-        state = (
-            graph.vertices()
-            .select(
-                "vid",
-                F.explode(F.sequence(F.lit(0), F.lit(wpv - 1))).alias("r"),
-            )
-            .select(
-                (F.col("vid") * wpv + F.col("r")).alias("walk_id"),
-                F.col("vid").alias("start"),
-                F.lit(None).cast("long").alias("prev"),
-                F.col("vid"),
-            )
-        )
-        state = keep(0, state)
-        start_t = 1
-
-    for t in range(start_t, walk_length + 1):
+    def step(t: int, state: DataFrame, _frames) -> DataFrame:
         if t == 1:
             # no predecessor: uniform O(1) indexed choice, exactly
             # random_walks' step (withColumn BEFORE the vid re-alias —
@@ -414,23 +344,11 @@ def node2vec_walks(
                 F.col("vid").alias("prev"),
                 F.col("_next").alias("vid"),
             )
-        obs = Observation(f"{job_name}_s{t}")
-        state = keep(t, nxt.observe(obs, F.count(F.lit(1)).alias("n")))
-        if int(obs.get["n"] or 0) == 0:
-            loop.discard_step(t)
-            frames.pop()
-            break
+        return nxt
 
-    out = spark.createDataFrame([], "walk_id long, start long, step int, vid long")
-    for t, df in frames:
-        out = out.unionByName(
-            df.select(
-                "walk_id", "start", F.lit(t).cast("int").alias("step"), "vid"
-            )
-        )
-    out = out.localCheckpoint(eager=True)
-    for df in locals_:
-        release_local_checkpoint(df)
+    out = _flood_walks(
+        graph, walks_per_vertex, walk_length, checkpoint_dir, resume, job_name,
+        step, F.lit(None).cast("long").alias("prev"),
+    )
     adj.unpersist()  # node2vec's own set-dedup'd frame, not the shared cache
-    loop.cleanup()
     return out

@@ -78,14 +78,27 @@ def _pin_n_buckets(labels_path: str, n_buckets: int, exists: bool) -> int:
     existing vids into the wrong partitions and silently duplicate them.
     Pin it in an underscore-prefixed sidecar (ignored by parquet
     discovery) on creation; later batches use the pinned value and warn
-    when the caller's differs."""
+    when the caller's differs. A table without the sidecar (a crash
+    between the first data write and the sidecar) is pinned to the
+    caller's count once its ``bucket=K`` directories agree with it."""
     meta = os.path.join(labels_path, "_n_buckets.json")
     if exists:
         try:
             with open(meta) as fh:
                 pinned = int(json.load(fh)["n_buckets"])
         except (OSError, ValueError, KeyError):
-            return n_buckets  # pre-sidecar table: trust the caller
+            buckets = [
+                int(d.split("=", 1)[1])
+                for d in os.listdir(labels_path)
+                if d.startswith("bucket=")
+            ]
+            if buckets and max(buckets) >= n_buckets:
+                raise ValueError(
+                    f"incremental_wcc_batch: labels table has bucket="
+                    f"{max(buckets)} but n_buckets={n_buckets}"
+                ) from None
+            _write_n_buckets(labels_path, n_buckets)
+            return n_buckets
         if pinned != n_buckets:
             import warnings
 

@@ -5,7 +5,10 @@ edges seen so far."""
 
 from __future__ import annotations
 
+import json
 import os
+
+import pytest
 
 from hugegraph_computer_spark.graph.graph import Graph
 from hugegraph_computer_spark.operators import wcc
@@ -313,3 +316,21 @@ def test_streaming_dedup_state_evicts_past_watermark(spark, tmp_path):
     rows = spark.read.parquet(out).select("doc_id", "text").collect()
     alpha_ids = sorted(r["doc_id"] for r in rows if r["text"] == "alpha")
     assert alpha_ids == [1, 3]  # re-emitted after eviction, by design
+
+
+def test_table_without_sidecar_is_checked_then_pinned(spark, tmp_path):
+    """A labels table whose bucket-count sidecar is missing (a crash
+    between the first data write and the sidecar) must not accept a
+    bucket count its directories contradict, and must be pinned once a
+    consistent count folds into it."""
+    labels_path = str(tmp_path / "labels")
+    first = [(i, i + 1000) for i in range(0, 40, 2)]
+    incremental_wcc_batch(edges_df(spark, first), labels_path, spark, n_buckets=16)
+    sidecar = os.path.join(labels_path, "_n_buckets.json")
+    os.remove(sidecar)
+    with pytest.raises(ValueError, match="bucket"):
+        incremental_wcc_batch(edges_df(spark, [(0, 2)]), labels_path, spark, n_buckets=4)
+    assert not os.path.exists(sidecar)
+    incremental_wcc_batch(edges_df(spark, [(0, 2)]), labels_path, spark, n_buckets=16)
+    with open(sidecar) as fh:
+        assert json.load(fh) == {"n_buckets": 16}
