@@ -411,18 +411,11 @@ class SuperstepLoop:
     def resume(self) -> tuple[int, DataFrame, dict] | None:
         """Latest complete snapshot → (superstep, state, aggregates); None
         if the job has never checkpointed."""
-        if not self.dir or not os.path.isdir(self.dir):
+        steps = self.completed_steps()
+        if not steps:
             return None
-        best = -1
-        for name in os.listdir(self.dir):
-            if name.startswith("superstep="):
-                s = int(name.split("=", 1)[1])
-                if s > best and os.path.exists(self._meta_path(s)):
-                    best = s
-        if best < 0:
-            return None
-        aggs = _unjsonable(self._meta(best)["aggregates"])
-        return best, self.read_step(best), aggs
+        s = steps[-1]
+        return s, self.read_step(s), _unjsonable(self._meta(s)["aggregates"])
 
     def _meta(self, superstep: int) -> dict:
         with open(self._meta_path(superstep)) as f:

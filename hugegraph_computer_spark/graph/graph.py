@@ -324,7 +324,6 @@ class Graph:
     def adjacency(
         self,
         chunk: int = DEFAULT_ADJ_CHUNK,
-        cache: bool = True,
         keep_chunk_no: bool = False,
     ) -> DataFrame:
         """Chunked adjacency ``(vid[, chunk_no int], nbrs array<long>, deg long)``.
@@ -373,19 +372,15 @@ class Graph:
             # exchange and no re-sort on the (large, static) adjacency side —
             # the Spark analogue of the reference's id-sorted partition files
             # merged-joined each superstep (FileGraphPartition.compute:158-214).
-            adj = adj.repartition(self.num_partitions, "vid").sortWithinPartitions("vid")
-            if cache:
-                adj = adj.persist()
-            self._adj_cache[key] = adj
+            self._adj_cache[key] = (
+                adj.repartition(self.num_partitions, "vid")
+                .sortWithinPartitions("vid")
+                .persist()
+            )
         adj = self._adj_cache[key]
         return adj if keep_chunk_no else adj.select("vid", "nbrs", "deg")
 
-    def flat_edges(
-        self,
-        cache: bool = True,
-        all_cols: bool = False,
-        build_hash: bool = False,
-    ) -> DataFrame:
+    def flat_edges(self, all_cols: bool = False) -> DataFrame:
         """Flat edges hash-partitioned by src and sorted within
         partitions — the co-partitioned STATIC side for every
         per-superstep ``frontier ⋈ edges`` join (Brandes/closeness level
@@ -401,34 +396,24 @@ class Graph:
         a filter/projection over the cached frame preserves the
         partitioning and sort, so the no-exchange property survives.
 
-        ``build_hash=True`` adds a ``shuffle_hash`` hint: build the SHJ
-        hash map on THIS (cached, already-partitioned) side instead of
-        sort-merge joining. Choose by the ratio of the DYNAMIC side to
-        the static side, measured per family on the sf0.1 graph
-        (BENCH_flat_edges_ab.json):
-
-        * multi-source path floods (Brandes/closeness/rings/links,
-          k·V-row frontiers that dwarf E) → ``True``: SMJ would re-SORT
-          the huge frontier every level (+16% on 64-source Brandes);
-          SHJ streams it unsorted, paying only an E/num_partitions
-          hash build, and closeness_32src measured −20%.
-        * V-row dynamic sides against E-row static (PageRank contribs,
-          V ≪ E) → ``False``: sorting V rows per superstep is cheaper
-          than re-building an E-row hash map (pagerank measured ~+10%
-          with the hint), and SMJ reuses the cached sort for free.
+        The frame carries a ``shuffle_hash`` hint: the SHJ hash map is
+        built on THIS (cached, already-partitioned) side instead of
+        sort-merge joining. Every caller joins a frontier against it
+        (the floods and k-core peeling); a multi-source flood's k·V-row
+        frontier dwarfs E, and SMJ would re-SORT it every level (+16% on
+        64-source Brandes), while SHJ streams it unsorted and pays only
+        an E/num_partitions hash build (closeness_32src measured −20%;
+        BENCH_flat_edges_ab.json).
         """
         key = "flat_all" if all_cols else "flat"
         if key not in self._adj_cache:
             base = self.edges if all_cols else self.edges.select("src", "dst")
-            fe = (
+            self._adj_cache[key] = (
                 base.repartition(self.num_partitions, "src")
                 .sortWithinPartitions("src")
+                .persist()
             )
-            if cache:
-                fe = fe.persist()
-            self._adj_cache[key] = fe
-        fe = self._adj_cache[key]
-        return fe.hint("shuffle_hash") if build_hash else fe
+        return self._adj_cache[key].hint("shuffle_hash")
 
     def unpersist(self) -> None:
         for adj in self._adj_cache.values():

@@ -54,7 +54,7 @@ def betweenness_centrality(
     # cached co-partitioned static side: every forward level and every
     # backward-sweep join hits the persisted src-partitioned frame
     # instead of re-scanning + re-shuffling the edge table per level
-    edges = graph.flat_edges(build_hash=True)
+    edges = graph.flat_edges()
     loop = SuperstepLoop(
         spark, f"{job_name}_levels", checkpoint_dir, max_depth + 1, resume=resume
     )

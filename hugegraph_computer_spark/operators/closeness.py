@@ -95,11 +95,11 @@ def closeness_centrality(
     # projection below preserves partitioning/sort, so each superstep's
     # frontier ⋈ edges join re-shuffles only the (small) frontier
     if weighted and "weight" in graph.edges.columns:
-        edges = graph.flat_edges(all_cols=True, build_hash=True).select(
+        edges = graph.flat_edges(all_cols=True).select(
             "src", "dst", F.coalesce(F.col("weight"), F.lit(1.0)).alias("w")
         )
     else:
-        edges = graph.flat_edges(build_hash=True).select("src", "dst", F.lit(1.0).alias("w"))
+        edges = graph.flat_edges().select("src", "dst", F.lit(1.0).alias("w"))
 
     if isinstance(sources, int):
         src_set = graph.vertices().orderBy("vid").limit(sources)

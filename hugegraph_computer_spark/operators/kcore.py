@@ -51,7 +51,7 @@ def coreness(
     # self-loops neither contribute to coreness nor to the peeling degree;
     # the filter sits over the cached src-partitioned frame (partitioning
     # and sort survive it), so each round's join re-shuffles nothing
-    edges = graph.flat_edges(build_hash=True).where(F.col("src") != F.col("dst"))
+    edges = graph.flat_edges().where(F.col("src") != F.col("dst"))
 
     def init():
         deg = edges.groupBy(F.col("src").alias("vid")).agg(

@@ -65,8 +65,8 @@ def rings_detection(
     # edge columns gating every send, superstep 0 included. The filter and
     # projection sit over the cached src-partitioned frame (Graph.
     # flat_edges), so per-superstep joins re-shuffle only the frontier.
-    edges = (graph.flat_edges(all_cols=True, build_hash=True)
-             if spread_cond is not None else graph.flat_edges(build_hash=True))
+    edges = (graph.flat_edges(all_cols=True)
+             if spread_cond is not None else graph.flat_edges())
     if spread_cond is not None:
         edges = edges.where(F.expr(spread_cond))
     edges = edges.select("src", "dst")
@@ -171,7 +171,7 @@ def rings_detection_with_filter(
     from hugegraph_computer_spark.operators.path_filter import RingsFilter
 
     rf = RingsFilter(describe)
-    edges = graph.flat_edges(all_cols=True, build_hash=True)  # cached static join side
+    edges = graph.flat_edges(all_cols=True)  # cached static join side
     carry = rf.carry_props
     missing = [p for p in carry if p not in edges.columns]
     if missing:

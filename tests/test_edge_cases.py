@@ -52,7 +52,7 @@ def test_star_graph_hub_chunking(spark):
     edges = [(0, i) for i in range(1, 601)]
     df = spark.createDataFrame(edges, "src long, dst long")
     g = Graph.from_edges(df, num_partitions=4)
-    adj = g.adjacency(chunk=64, cache=False)
+    adj = g.adjacency(chunk=64)
     hub_rows = adj.where("vid = 0").collect()
     assert len(hub_rows) == 10  # ceil(600/64)
     assert all(r["deg"] == 600 for r in hub_rows)

@@ -201,11 +201,13 @@ def test_snapshot_format_seam(spark, tmp_path):
 
 def test_level_flood_join_no_exchange_on_cached_flat_edges(spark):
     """The per-level frontier ⋈ edges join of the path-flood family
-    (betweenness/closeness/rings/links/kcore) must need neither an
-    Exchange nor a Sort on the cached flat_edges side — the static side
-    is persisted hash-partitioned + sorted by src, so each level
-    re-shuffles only the frontier. Also covers the all_cols variant:
-    a filter + projection over it must preserve the property."""
+    (betweenness/closeness/rings/links/kcore) must be a ShuffledHashJoin
+    building on the cached flat_edges side with no Exchange on it — the
+    static side is persisted hash-partitioned by src, so each level
+    re-shuffles only the frontier, and SHJ never sorts either input at
+    join time (SMJ would re-sort the k·V-row frontier every level). Also
+    covers the all_cols variant: a filter + projection over it must
+    preserve the property."""
     g = make_graph(spark, random_edges(100, 300, seed=2))
     fe = g.flat_edges()
     fe.count()
@@ -213,7 +215,7 @@ def test_level_flood_join_no_exchange_on_cached_flat_edges(spark):
         F.col("vid").alias("source"), F.col("vid"), F.lit(1.0).alias("sigma")
     )
     def static_branch_lines(plan: str) -> list[str]:
-        """Lines of the SMJ's RIGHT (static) branch: walk upward from the
+        """Lines of the join's RIGHT (static) branch: walk upward from the
         InMemoryTableScan line, collecting ancestors until the join; the
         left branch's lines all carry the ':' tree marker, the right
         branch's do not."""
@@ -227,40 +229,19 @@ def test_level_flood_join_no_exchange_on_cached_flat_edges(spark):
                 branch.append(l)
         return branch
 
+    fe_all = g.flat_edges(all_cols=True)
+    fe_all.count()
+    filtered = fe_all.where(F.col("src") != F.col("dst")).select("src", "dst")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = frontier.join(fe, frontier["vid"] == fe["src"])
-        assert_no_cartesian(joined)
-        plan = explain_str(joined, mode="simple")
-        bad = [l for l in static_branch_lines(plan)
-               if "Exchange" in l or "Sort" in l]
-        assert not bad, (bad, plan[:1800])
-
-        fe_all = g.flat_edges(all_cols=True)
-        fe_all.count()
-        filtered = fe_all.where(F.col("src") != F.col("dst")).select("src", "dst")
-        plan2 = explain_str(
-            frontier.join(filtered, frontier["vid"] == filtered["src"]),
-            mode="simple",
-        )
-        bad2 = [l for l in static_branch_lines(plan2)
-                if "Exchange" in l or "Sort" in l]
-        assert not bad2, (bad2, plan2[:1800])
-
-        # build_hash=True (the flood family's choice): the join must be a
-        # ShuffledHashJoin building on the cached side — SHJ never sorts
-        # either input at join time (SMJ would re-sort the k·V-row
-        # frontier every level), so asserting the strategy IS the no-sort
-        # assertion; the static branch additionally needs no Exchange.
-        fe_hash = g.flat_edges(build_hash=True)
-        plan3 = explain_str(
-            frontier.join(fe_hash, frontier["vid"] == fe_hash["src"]),
-            mode="simple",
-        )
-        assert "ShuffledHashJoin" in plan3, plan3[:1800]
-        bad3 = [l for l in static_branch_lines(plan3) if "Exchange" in l]
-        assert not bad3, (bad3, plan3[:1800])
+        for static in (fe, filtered):
+            joined = frontier.join(static, frontier["vid"] == static["src"])
+            assert_no_cartesian(joined)
+            plan = explain_str(joined, mode="simple")
+            assert "ShuffledHashJoin" in plan, plan[:1800]
+            bad = [l for l in static_branch_lines(plan) if "Exchange" in l]
+            assert not bad, (bad, plan[:1800])
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 

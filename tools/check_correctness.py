@@ -70,13 +70,23 @@ def main() -> int:
         master="local[8]", app_name="check-correctness", shuffle_partitions=16,
         extra_conf={"spark.executorEnv.PYTHONPATH": str(REPO)},
     )
+    results = check(spark, sf_dir, only)
+    spark.stop()
+    return 1 if any(results.values()) else 0
+
+
+def check(spark, sf_dir: str, only=()) -> dict[str, list[str]]:
+    """Run each ``queries()`` entry (all, or those named in ``only``) on
+    ``spark`` and its ``oracle_sql()`` twin on DuckDB over the same
+    parquet. Returns the problems found per compared query (an empty
+    list when it matches); queries without an oracle are only reported."""
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    failures = 0
+    results: dict[str, list[str]] = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -84,8 +94,8 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
-            failures += 1
+            results[name] = [f"spark error {type(e).__name__}: {e}"]
+            print(f"FAIL  {name}: {results[name][0]}")
             continue
         t_spark = time.time() - t0
         if name not in oracles:
@@ -95,20 +105,19 @@ def main() -> int:
         try:
             ddf = con.sql(oracles[name]).df()
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error {type(e).__name__}: {e}")
-            failures += 1
+            results[name] = [f"duckdb error {type(e).__name__}: {e}"]
+            print(f"FAIL  {name}: {results[name][0]}")
             continue
         t_duck = time.time() - t0
-        problems = compare(name, sdf, ddf)
+        results[name] = problems = compare(name, sdf, ddf)
         if problems:
-            failures += 1
             print(f"FAIL  {name} [{t_spark:.1f}s/{t_duck:.1f}s]:")
             for p in problems:
                 print(f"      {p}")
         else:
             print(f"OK    {name}: {len(sdf)} rows [{t_spark:.1f}s/{t_duck:.1f}s]")
-    spark.stop()
-    return 1 if failures else 0
+    con.close()
+    return results
 
 
 if __name__ == "__main__":
