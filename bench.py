@@ -503,7 +503,8 @@ def measure_pagerank(rows: int, cpus: int) -> dict:
     adjacency untimed, then time ``SUPERSTEPS`` fixed PageRank supersteps."""
     spark = session(cpus)
     g = Graph.from_edges(spark.read.parquet(edges_path(rows)),
-                         symmetrize=False, dedup=False, num_partitions=cpus)
+                         symmetrize=False, edge_freq="multiple",
+                         num_partitions=cpus)
     n = g.num_vertices()
     g.adjacency().count()
     sym_edges = g.edges.count()

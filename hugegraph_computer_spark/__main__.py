@@ -106,6 +106,61 @@ def _decode_corpus_ids(result, ids, algorithm: str):
     return result
 
 
+def algorithm_kwargs(args: argparse.Namespace) -> dict:
+    """The keyword arguments the parsed flags select for
+    ``ALGORITHMS[args.algorithm]`` (pure: no Spark). Raises ValueError
+    for a flag combination the algorithm cannot take."""
+    a = args.algorithm
+    steps = dict(max_supersteps=args.max_supersteps)
+    durable = dict(checkpoint_dir=args.checkpoint_dir, resume=args.resume)
+    weighted = args.weight_col is not None
+    spread = {} if args.spread_cond is None else dict(spread_cond=args.spread_cond)
+    if a == "page_rank":
+        kw = dict(alpha=args.alpha, l1_threshold=args.l1_threshold,
+                  **steps, **durable)
+    elif a in ("wcc", "lpa", "coreness"):
+        kw = dict(**steps, **durable)
+    elif a == "closeness_centrality":
+        kw = dict(sources=args.sources, weighted=weighted, **steps, **durable)
+    elif a == "betweenness_centrality":
+        kw = dict(sources=args.sources, **durable)
+    elif a == "degree_centrality":
+        kw = dict(weighted=weighted)
+    elif a == "ppr":
+        if args.seed_vertices is None:
+            raise ValueError("ppr requires --seed-vertices (comma-separated ids)")
+        kw = dict(
+            sources=[int(v) for v in args.seed_vertices.split(",")],
+            alpha=args.alpha,
+            supersteps=args.max_supersteps,
+            **durable,
+        )
+    elif a == "links":
+        if args.start_cond is None:
+            raise ValueError("links requires --start-cond (and optionally "
+                             "--spread-cond/--end-vertex-cond/--end-edge-cond)")
+        kw = dict(start_cond=args.start_cond, **spread, **steps, **durable)
+        if args.end_vertex_cond is not None:
+            kw["end_vertex_cond"] = args.end_vertex_cond
+        if args.end_edge_cond is not None:
+            kw["end_edge_cond"] = args.end_edge_cond
+    elif a == "rings":
+        kw = dict(**spread, **steps, **durable)
+    elif a in ("random_walks", "node2vec"):
+        kw = dict(walks_per_vertex=args.walks_per_vertex,
+                  walk_length=args.walk_length, **durable)
+        if a == "node2vec":
+            kw.update(p=args.p, q=args.q)
+    elif a == "neighborhood_sample":
+        kw = dict(fanouts=tuple(int(x) for x in args.fanouts.split(",")))
+    else:  # triangle_count, clustering_coefficient
+        kw = {}
+    if "checkpoint_dir" not in kw and (args.checkpoint_dir is not None or args.resume):
+        raise ValueError(f"{a} does not support --checkpoint-dir/--resume "
+                         "(no superstep state)")
+    return kw
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     from hugegraph_computer_spark.graph.graph import Graph
@@ -118,13 +173,10 @@ def main(argv: list[str] | None = None) -> int:
         print(f"unknown algorithm {args.algorithm!r}; "
               f"one of {sorted(ALGORITHMS)}", file=sys.stderr)
         return 2
-    if args.algorithm == "links" and args.start_cond is None:
-        print("links requires --start-cond (and optionally --spread-cond/"
-              "--end-vertex-cond/--end-edge-cond)", file=sys.stderr)
-        return 2
-    if args.algorithm == "ppr" and args.seed_vertices is None:
-        print("ppr requires --seed-vertices (comma-separated ids)",
-              file=sys.stderr)
+    try:
+        kw = algorithm_kwargs(args)
+    except ValueError as e:
+        print(e, file=sys.stderr)
         return 2
 
     spark = get_spark(master=args.master, app_name=f"hgc-{args.algorithm}")
@@ -140,59 +192,7 @@ def main(argv: list[str] | None = None) -> int:
             weight_col=args.weight_col,
         )
 
-    algo = ALGORITHMS[args.algorithm]
-    kw: dict = {}
-    if args.algorithm == "page_rank":
-        kw = dict(alpha=args.alpha, l1_threshold=args.l1_threshold,
-                  max_supersteps=args.max_supersteps,
-                  checkpoint_dir=args.checkpoint_dir, resume=args.resume)
-    elif args.algorithm in ("wcc", "lpa"):
-        kw = dict(max_supersteps=args.max_supersteps,
-                  checkpoint_dir=args.checkpoint_dir, resume=args.resume)
-    elif args.algorithm == "closeness_centrality":
-        kw = dict(sources=args.sources, max_supersteps=args.max_supersteps,
-                  checkpoint_dir=args.checkpoint_dir, resume=args.resume)
-    elif args.algorithm == "betweenness_centrality":
-        kw = dict(sources=args.sources)
-    elif args.algorithm == "ppr":
-        kw = dict(
-            sources=[int(v) for v in args.seed_vertices.split(",")],
-            alpha=args.alpha,
-            supersteps=args.max_supersteps,
-            checkpoint_dir=args.checkpoint_dir,
-            resume=args.resume,
-        )
-    elif args.algorithm == "links":
-        kw = dict(start_cond=args.start_cond,
-                  max_supersteps=args.max_supersteps)
-        if args.spread_cond is not None:
-            kw["spread_cond"] = args.spread_cond
-        if args.end_vertex_cond is not None:
-            kw["end_vertex_cond"] = args.end_vertex_cond
-        if args.end_edge_cond is not None:
-            kw["end_edge_cond"] = args.end_edge_cond
-    elif args.algorithm == "rings":
-        kw = dict(max_supersteps=args.max_supersteps)
-        if args.spread_cond is not None:
-            kw["spread_cond"] = args.spread_cond
-    elif args.algorithm in ("random_walks", "node2vec"):
-        kw = dict(
-            walks_per_vertex=args.walks_per_vertex,
-            walk_length=args.walk_length,
-            checkpoint_dir=args.checkpoint_dir,
-            resume=args.resume,
-        )
-        if args.algorithm == "node2vec":
-            kw.update(p=args.p, q=args.q)
-    elif args.algorithm == "neighborhood_sample":
-        if args.checkpoint_dir is not None or args.resume:
-            print("neighborhood_sample does not support --checkpoint-dir/"
-                  "--resume (single multi-hop job, no superstep state)",
-                  file=sys.stderr)
-            return 2
-        kw = dict(fanouts=tuple(int(x) for x in args.fanouts.split(",")))
-
-    result = algo(g, **kw)
+    result = ALGORITHMS[args.algorithm](g, **kw)
     if ids is not None:
         result = _decode_corpus_ids(result, ids, args.algorithm)
 

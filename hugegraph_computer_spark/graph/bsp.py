@@ -17,16 +17,16 @@ That master loop exists once, in two drivers:
   observe, and its stop rule;
 * ``SuperstepLoop.flood(init, step, record)`` for every replay-resume
   flood (rings, rings with filter, links, random and node2vec walks,
-  unweighted closeness, the forward BFS of betweenness): each operator
-  supplies only its superstep-0 frontier and its per-superstep plan; the
-  flood records per-superstep results and stops at the first empty
-  frontier.
+  unweighted closeness, the forward BFS of betweenness) and for the
+  non-durable backward sweep of betweenness: each operator supplies only
+  its superstep-0 frontier and its per-superstep plan; the flood records
+  per-superstep results and stops at the first empty frontier.
 
 What the reference left as a TODO — resume (MasterService.java:213, 316-322)
 — is implemented here for real, per the north rule:
 
-* each superstep writes the full algorithm state to
-  ``{dir}/{job}/superstep={s}/`` as parquet, plus a ``_meta.json`` carrying
+* with a checkpoint dir, EVERY superstep writes the full algorithm state
+  to ``{dir}/{job}/superstep={s}/`` as parquet, plus a ``_meta.json`` carrying
   the superstep id, the global aggregator values, per-partition row counts
   (lineage), and wall-clock metrics;
 * ``SuperstepLoop.resume()`` finds the latest *complete* snapshot (the meta
@@ -125,7 +125,6 @@ class SuperstepLoop:
         job_name: str,
         checkpoint_dir: str | None = None,
         max_supersteps: int = 10,
-        checkpoint_every: int = 1,
         snapshot_format: str = "parquet",
         resume: bool = False,
     ):
@@ -140,7 +139,6 @@ class SuperstepLoop:
         if self.dir and not resume and os.path.isdir(self.dir):
             shutil.rmtree(self.dir)
         self.max_supersteps = max_supersteps
-        self.checkpoint_every = max(1, checkpoint_every)
         # The snapshot writer is a FORMAT SEAM, not a hardcoded call: every
         # durable write/read goes through .format(snapshot_format) — on a
         # cluster with the Iceberg runtime jar, snapshot_format="iceberg"
@@ -286,11 +284,6 @@ class SuperstepLoop:
     def _meta_path(self, superstep: int) -> str:
         return os.path.join(self._step_dir(superstep), "_meta.json")
 
-    def _durable(self, superstep: int) -> bool:
-        return self.dir is not None and (
-            superstep % self.checkpoint_every == 0 or superstep >= self.max_supersteps
-        )
-
     def materialize(
         self, superstep: int, state: DataFrame, pinned: list[DataFrame] | None = None
     ) -> DataFrame:
@@ -303,7 +296,7 @@ class SuperstepLoop:
         frame joins ``pinned`` when given, else the rolling window of
         ``RELEASE_WINDOW`` generations."""
         self._pending_metrics = {}
-        if self._durable(superstep):
+        if self.dir is not None:
             path = self._step_dir(superstep)
             if os.path.exists(path):
                 shutil.rmtree(path)
@@ -338,7 +331,7 @@ class SuperstepLoop:
         mid-write resumes from the previous superstep."""
         record = SuperstepRecord(superstep, dict(aggregates), dict(metrics or {}))
         record.metrics.update(getattr(self, "_pending_metrics", {}))
-        if self._durable(superstep):
+        if self.dir is not None:
             with open(self._meta_path(superstep), "w") as f:
                 json.dump(
                     {

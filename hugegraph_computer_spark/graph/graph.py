@@ -5,18 +5,20 @@ Mirrors the reference's runtime data model (SURVEY.md §1) without porting it:
 * the reference decomposes a property graph into an id-sorted vertex table
   and a packed out-adjacency table per hash partition
   (computer-core/.../compute/FileGraphPartition.java:96-122, 302-339);
-  we keep ``edges(src long, dst long [, weight double])`` and a derived,
-  cached ``adjacency`` DataFrame ``(vid, nbrs array<long>, deg long)``.
+  we keep ``edges(src long, dst long [, weight double])`` and two derived,
+  cached frames: ``adjacency()`` ``(vid, chunk_no, nbrs array<long>, deg)``
+  for the scatter family and ``flat_edges()`` (every edge column) for the
+  floods. Callers select the columns they read.
 * the reference symmetrizes the graph at load by default — for every loaded
   edge u→v it also creates v→u with property inv=true
   (computer-core/.../input/WorkerInputManager.java:104-122), so all
   algorithms see undirected neighborhoods. ``Graph.from_edges`` replicates
   this with a union of the reversed edge table.
 * duplicate edges are deduplicated per ``input.edge_freq`` (SINGLE keeps one
-  edge per (src,dst); default MULTIPLE keeps all —
-  computer-core/.../config/EdgeFrequency.java:26-44). ``dedup=True`` maps to
-  SINGLE, which is what TriangleCount pins
-  (TriangleCountParams.java:41-42).
+  edge per (src,dst); MULTIPLE keeps all —
+  computer-core/.../config/EdgeFrequency.java:26-44). The engine defaults
+  to SINGLE, which is what TriangleCount pins
+  (TriangleCountParams.java:41-42); the reference defaults to MULTIPLE.
 * edges whose endpoints have no vertex record are dropped by the reference's
   input merge ("Skip stale edges", FileGraphPartition.java:314-317); we take
   the vertex set to be the endpoints of the edge table unless an explicit
@@ -24,10 +26,11 @@ Mirrors the reference's runtime data model (SURVEY.md §1) without porting it:
   away exactly like the reference.
 * super-node handling: the reference chunks a hub's adjacency into <=200-edge
   sub-entries so no single record must fit in memory
-  (ComputerOptions.java:168-175). ``adjacency(chunk=...)`` does the same —
-  a hub's neighbor array is split across several rows, which also breaks
-  shuffle skew: a scatter that explodes chunked rows partial-aggregates per
-  chunk before the final combine (classic salting).
+  (ComputerOptions.java:168-175). ``adjacency()`` does the same at
+  ``DEFAULT_ADJ_CHUNK`` — a hub's neighbor array is split across several
+  rows, which also breaks shuffle skew: a scatter that explodes chunked
+  rows partial-aggregates per chunk before the final combine (classic
+  salting).
 
 Scale notes (100 TB / 10^12 files): edges and adjacency are hash-partitioned
 by vertex id (``repartition(n, src)``), so the per-superstep scatter join
@@ -111,7 +114,8 @@ class Graph:
     edges: DataFrame
     directed_edge_count: int | None = None
     num_partitions: int = 32
-    _adj_cache: dict = field(default_factory=dict, repr=False)
+    _adj: DataFrame | None = field(default=None, init=False, repr=False)
+    _flat: DataFrame | None = field(default=None, init=False, repr=False)
     _vertices: DataFrame | None = None
     _num_vertices: int | None = None
 
@@ -120,7 +124,6 @@ class Graph:
     def from_edges(
         edges: DataFrame,
         symmetrize: bool = True,
-        dedup: bool = True,
         drop_self_loops: bool = False,
         vertices: DataFrame | None = None,
         num_partitions: int | None = None,
@@ -128,7 +131,7 @@ class Graph:
         weight_agg: str = "max",
         label_col: str | None = None,
         properties: list[str] | None = None,
-        edge_freq: str | None = None,
+        edge_freq: str = "single",
         props_combiner: str = "min",
         order_col: str | None = None,
     ) -> "Graph":
@@ -138,12 +141,11 @@ class Graph:
         symmetrize: add the inverse edge for every input edge (reference
         default, WorkerInputManager.java:104-122); the inverse copy
         carries the same weight/label/property values.
-        edge_freq: "single" (one edge per (src,dst)),
+        edge_freq: "single" (default; one edge per (src,dst)),
         "single_per_label" (one per (src,dst,label) — requires label_col),
         or "multiple" (keep all) — EdgeFrequency.java:26-44; the reference
         default is MULTIPLE, TriangleCount pins SINGLE
-        (TriangleCountParams.java:41-42). When None, derived from the
-        legacy ``dedup`` flag (True → single, False → multiple).
+        (TriangleCountParams.java:41-42).
         label_col: kept on ``edges`` as ``label`` (string) — the edge
         label the reference's filter DSL predicates over
         (LinksSpreadFilter.java:66-96).
@@ -180,10 +182,9 @@ class Graph:
         makes. The symmetrized inverse copy carries the same order value,
         so both directions merge identically.
         """
-        freq = edge_freq or ("single" if dedup else "multiple")
-        if freq not in ("single", "single_per_label", "multiple"):
-            raise ValueError(f"unknown edge_freq {freq!r}")
-        if freq == "single_per_label" and not label_col:
+        if edge_freq not in ("single", "single_per_label", "multiple"):
+            raise ValueError(f"unknown edge_freq {edge_freq!r}")
+        if edge_freq == "single_per_label" and not label_col:
             raise ValueError("edge_freq='single_per_label' requires label_col")
         if props_combiner not in ("min", "merge_new", "merge_old", "overwrite"):
             raise ValueError(f"unknown props_combiner {props_combiner!r}")
@@ -221,9 +222,9 @@ class Graph:
                 F.col(c) for c in carry
             ]
             e = e.unionByName(e.select(*rev))
-        if freq != "multiple":
+        if edge_freq != "multiple":
             keys = ["src", "dst"] + (
-                ["label"] if freq == "single_per_label" else []
+                ["label"] if edge_freq == "single_per_label" else []
             )
             value_cols = [c for c in extra if c not in keys]
             if not value_cols:
@@ -321,30 +322,27 @@ class Graph:
             .select("vid", F.coalesce("deg", zero).alias("deg"))
         )
 
-    def adjacency(
-        self,
-        chunk: int = DEFAULT_ADJ_CHUNK,
-        keep_chunk_no: bool = False,
-    ) -> DataFrame:
-        """Chunked adjacency ``(vid[, chunk_no int], nbrs array<long>, deg long)``.
+    def adjacency(self) -> DataFrame:
+        """Chunked adjacency ``(vid, chunk_no int, nbrs array<long>, deg long)``.
 
         ``deg`` is the vertex's TOTAL degree (repeated on every chunk row).
-        Hubs with degree > chunk are split across ceil(deg/chunk) rows —
-        the Spark analogue of the reference's <=200-edge sub-entries
-        (ComputerOptions.java:168-175; EdgesInput.java:90-143) and the
-        skew-salting required by the north rule: exploding a chunk never
-        materializes a hub's full neighbor list in one task, and downstream
-        groupBy(dst) partial-aggregates per chunk.
+        Hubs with degree > ``DEFAULT_ADJ_CHUNK`` are split across
+        ceil(deg/chunk) rows — the Spark analogue of the reference's
+        <=200-edge sub-entries (ComputerOptions.java:168-175;
+        EdgesInput.java:90-143) and the skew-salting required by the north
+        rule: exploding a chunk never materializes a hub's full neighbor
+        list in one task, and downstream groupBy(dst) partial-aggregates
+        per chunk. Chunks are consecutive slices of the globally sorted
+        neighbor list, so global index ``i`` lives in chunk ``i div
+        chunk`` at offset ``i mod chunk`` — the two-level indexed choice
+        random_walks uses.
 
-        ``keep_chunk_no=True`` exposes the chunk ordinal (chunks are
-        consecutive slices of the globally sorted neighbor list, so
-        global index ``i`` lives in chunk ``i div chunk`` at offset
-        ``i mod chunk`` — the two-level indexed choice random_walks
-        uses). One frame is cached per chunk size; the chunk_no-free
-        shape is a projection of it, so both share the cache.
+        One frame is cached per graph; callers select the columns they
+        read (the scatter family reads ``vid, nbrs``), and the projection
+        keeps the cached partitioning.
         """
-        key = chunk
-        if key not in self._adj_cache:
+        if self._adj is None:
+            chunk = DEFAULT_ADJ_CHUNK
             adj = (
                 self.edges.groupBy("src")
                 .agg(F.sort_array(F.collect_list("dst")).alias("all_nbrs"))
@@ -372,29 +370,28 @@ class Graph:
             # exchange and no re-sort on the (large, static) adjacency side —
             # the Spark analogue of the reference's id-sorted partition files
             # merged-joined each superstep (FileGraphPartition.compute:158-214).
-            self._adj_cache[key] = (
+            self._adj = (
                 adj.repartition(self.num_partitions, "vid")
                 .sortWithinPartitions("vid")
                 .persist()
             )
-        adj = self._adj_cache[key]
-        return adj if keep_chunk_no else adj.select("vid", "nbrs", "deg")
+        return self._adj
 
-    def flat_edges(self, all_cols: bool = False) -> DataFrame:
-        """Flat edges hash-partitioned by src and sorted within
-        partitions — the co-partitioned STATIC side for every
-        per-superstep ``frontier ⋈ edges`` join (Brandes/closeness level
-        floods, rings/links path floods, k-core peeling). Cached like the chunked adjacency: without it each
-        level re-scans the source and re-shuffles the full edge table,
-        a D× constant factor at scale; the persisted relation instead
-        advertises HashPartitioning(src) + src sort order, so the join
-        needs no exchange and no re-sort on the large static side.
+    def flat_edges(self) -> DataFrame:
+        """Every edge column (src, dst, weights, labels, carry props, edge
+        ids), hash-partitioned by src and sorted within partitions — the
+        co-partitioned STATIC side for every per-superstep ``frontier ⋈
+        edges`` join (Brandes/closeness level floods, rings/links path
+        floods, k-core peeling). Cached like the adjacency: without it
+        each level re-scans the source and re-shuffles the full edge
+        table, a D× constant factor at scale; the persisted relation
+        instead advertises HashPartitioning(src) + src sort order, so the
+        join needs no exchange and no re-sort on the large static side.
 
-        ``all_cols=False`` keeps only (src, dst); ``all_cols=True``
-        keeps every edge column (weights, labels, carry props, edge
-        ids) for operators that filter or project them per superstep —
-        a filter/projection over the cached frame preserves the
-        partitioning and sort, so the no-exchange property survives.
+        One frame is cached per graph. A filter or projection over it
+        preserves the partitioning and sort, so callers select what they
+        read; those that need only the topology project ``src, dst``, so
+        no property column can collide with their frontier columns.
 
         The frame carries a ``shuffle_hash`` hint: the SHJ hash map is
         built on THIS (cached, already-partitioned) side instead of
@@ -405,20 +402,19 @@ class Graph:
         an E/num_partitions hash build (closeness_32src measured −20%;
         BENCH_flat_edges_ab.json).
         """
-        key = "flat_all" if all_cols else "flat"
-        if key not in self._adj_cache:
-            base = self.edges if all_cols else self.edges.select("src", "dst")
-            self._adj_cache[key] = (
-                base.repartition(self.num_partitions, "src")
+        if self._flat is None:
+            self._flat = (
+                self.edges.repartition(self.num_partitions, "src")
                 .sortWithinPartitions("src")
                 .persist()
             )
-        return self._adj_cache[key].hint("shuffle_hash")
+        return self._flat.hint("shuffle_hash")
 
     def unpersist(self) -> None:
-        for adj in self._adj_cache.values():
-            adj.unpersist()
-        self._adj_cache.clear()
+        for df in (self._adj, self._flat):
+            if df is not None:
+                df.unpersist()
+        self._adj = self._flat = None
 
 
 def dense_ids(df: DataFrame, col: str, order: str = "lex") -> DataFrame:

@@ -64,7 +64,6 @@ def run_program(
     program: VertexProgram,
     max_supersteps: int = 10,
     checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
     resume: bool = False,
 ) -> DataFrame:
     """Run a VertexProgram on ``SuperstepLoop.run``.
@@ -77,10 +76,9 @@ def run_program(
     """
     spark = graph.edges.sparkSession
     loop = SuperstepLoop(
-        spark, program.name, checkpoint_dir, max_supersteps, checkpoint_every,
-        resume=resume,
+        spark, program.name, checkpoint_dir, max_supersteps, resume=resume
     )
-    adj = graph.adjacency()
+    adj = graph.adjacency().select("vid", "nbrs")
 
     def init():
         state = program.init(graph.vertices())

@@ -69,10 +69,8 @@ def closeness_centrality(
     sample_rate: float = 1.0,
     max_supersteps: int = 20,
     checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
     job_name: str = "closeness_centrality",
     resume: bool = False,
-    round_to: int = 6,
 ) -> DataFrame:
     """Run closeness centrality; returns ``(vid long, closeness double)``.
 
@@ -95,7 +93,7 @@ def closeness_centrality(
     # projection below preserves partitioning/sort, so each superstep's
     # frontier ⋈ edges join re-shuffles only the (small) frontier
     if weighted and "weight" in graph.edges.columns:
-        edges = graph.flat_edges(all_cols=True).select(
+        edges = graph.flat_edges().select(
             "src", "dst", F.coalesce(F.col("weight"), F.lit(1.0)).alias("w")
         )
     else:
@@ -109,17 +107,12 @@ def closeness_centrality(
         src_set = None
 
     # the delta layout's durable state is the UNION of every superstep's
-    # delta, so every delta must be durable for resume to be correct —
-    # checkpoint_every is forced to 1 there (a sparser cadence would
-    # silently drop the skipped supersteps' settled (vid, start) pairs)
+    # delta; the loop snapshots every superstep, so resume sees them all
     loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, max_supersteps,
-        checkpoint_every if weighted else 1, resume=resume,
+        spark, job_name, checkpoint_dir, max_supersteps, resume=resume
     )
     if not weighted:
-        return _closeness_unweighted_delta(
-            graph, edges, src_set, sample_rate, loop, round_to
-        )
+        return _closeness_unweighted_delta(graph, edges, src_set, sample_rate, loop)
 
     def init() -> tuple[DataFrame, dict]:
         # superstep 0 (compute0): every (selected) vertex mails
@@ -170,7 +163,7 @@ def closeness_centrality(
         return new_state, {"improved": F.sum(F.col("fresh").cast("long"))}
 
     state = loop.run(init, step, lambda s, aggs: not aggs["improved"])
-    return _finish(graph, state, round_to)
+    return _finish(graph, state)
 
 
 def _scatter(
@@ -197,7 +190,6 @@ def _closeness_unweighted_delta(
     src_set: DataFrame | None,
     sample_rate: float,
     loop: SuperstepLoop,
-    round_to: int,
 ) -> DataFrame:
     """Unweighted fast path: append-only settled deltas (disjoint per
     superstep — first arrival is the minimum hop distance, with or
@@ -234,7 +226,7 @@ def _closeness_unweighted_delta(
         return cand.join(keys, ["vid", "start"], "left_anti")
 
     deltas = loop.flood(init, step)
-    out = _finish(graph, settled.extend(deltas), round_to)
+    out = _finish(graph, settled.extend(deltas))
     # copy the result out so the settled state and the loop's pinned
     # deltas can be released
     out = out.localCheckpoint(eager=True)
@@ -243,9 +235,9 @@ def _closeness_unweighted_delta(
     return out
 
 
-def _finish(graph: Graph, state: DataFrame, round_to: int) -> DataFrame:
+def _finish(graph: Graph, state: DataFrame) -> DataFrame:
     cc = state.groupBy("vid").agg(
-        F.round(F.sum(1.0 / F.col("dist")), round_to).alias("closeness")
+        F.round(F.sum(1.0 / F.col("dist")), 6).alias("closeness")
     )
     return (
         graph.vertices()

@@ -349,7 +349,6 @@ def decontaminate(
     shingle_n: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: ``(doc_id, n_grams long, hits long,
     overlap_frac double)`` — for every training document, the fraction
@@ -358,25 +357,21 @@ def decontaminate(
     consumer thresholds overlap_frac to drop contaminated docs).
 
     Scale shape: the benchmark side collapses to its DISTINCT n-gram
-    md5 set — a few MB even for large eval suites, broadcast by default
-    (`broadcast_benchmark=False` falls back to a shuffle hash join when
-    the "benchmark" is actually another corpus). The train side is one
-    explode → broadcast-probe → per-doc groupBy: ONE shuffle on doc_id
-    with map-side partial agg, no quadratic term anywhere. Joining on
-    md5(shingle) keeps the broadcast and shuffle rows fixed-width
-    instead of carrying long n-gram strings. overlap_frac is one IEEE
+    md5 set — a few MB even for large eval suites, so it is broadcast.
+    The train side is one explode → broadcast-probe → per-doc groupBy:
+    ONE shuffle on doc_id with map-side partial agg, no quadratic term
+    anywhere. Joining on md5(shingle) keeps the broadcast and shuffle
+    rows fixed-width instead of carrying long n-gram strings. overlap_frac is one IEEE
     division of exact integers — engine-portable
     (oracles.decontaminate_sql)."""
     if shingle_n < 1:
         raise ValueError("decontaminate: shingle_n >= 1")
-    bench_grams = (
+    bench_grams = F.broadcast(
         benchmark.select(F.explode(shingles(text_col, shingle_n)).alias("g"))
         .select(F.md5("g").alias("gh"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     train_grams = train.select(
         F.col(id_col).alias("doc_id"),
         F.explode(shingles(text_col, shingle_n)).alias("g"),

@@ -38,20 +38,21 @@ def coreness(
     graph: Graph,
     max_supersteps: int = 100,
     checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
     job_name: str = "coreness",
     resume: bool = False,
 ) -> DataFrame:
     """Returns ``(vid long, coreness long)`` (0 for isolated vertices)."""
     spark = graph.edges.sparkSession
     loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, max_supersteps, checkpoint_every,
-        resume=resume,
+        spark, job_name, checkpoint_dir, max_supersteps, resume=resume
     )
     # self-loops neither contribute to coreness nor to the peeling degree;
-    # the filter sits over the cached src-partitioned frame (partitioning
-    # and sort survive it), so each round's join re-shuffles nothing
-    edges = graph.flat_edges().where(F.col("src") != F.col("dst"))
+    # the projection and filter sit over the cached src-partitioned frame
+    # (partitioning and sort survive them), so each round's join
+    # re-shuffles nothing
+    edges = (
+        graph.flat_edges().select("src", "dst").where(F.col("src") != F.col("dst"))
+    )
 
     def init():
         deg = edges.groupBy(F.col("src").alias("vid")).agg(

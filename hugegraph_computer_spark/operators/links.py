@@ -76,7 +76,7 @@ def links(
     * ``edge_id_col`` — name of an edge column holding the edge id; the
       output gains ``edge_path`` (the LinksValue edge-id chain), one row
       per distinct chain under parallel edges."""
-    edges = graph.flat_edges(all_cols=True)  # cached static join side
+    edges = graph.flat_edges()  # cached static join side
     carry = list(carry_props)
     missing = [p for p in carry if p not in edges.columns]
     if missing:

@@ -42,17 +42,15 @@ def lpa(
     graph: Graph,
     max_supersteps: int = 10,
     checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
     job_name: str = "lpa",
     resume: bool = False,
 ) -> DataFrame:
     """Run LPA; returns ``(vid long, label long)``."""
     spark = graph.edges.sparkSession
     loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, max_supersteps, checkpoint_every,
-        resume=resume,
+        spark, job_name, checkpoint_dir, max_supersteps, resume=resume
     )
-    adj = graph.adjacency()
+    adj = graph.adjacency().select("vid", "nbrs")
 
     def init():
         # superstep 0 (Lpa.java:52-58): label = self id, everyone sends.

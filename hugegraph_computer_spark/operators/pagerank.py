@@ -60,7 +60,6 @@ def pagerank(
     l1_threshold: float = 1e-5,
     max_supersteps: int = 10,
     checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
     job_name: str = "page_rank",
     resume: bool = False,
     stats_out: dict | None = None,
@@ -73,14 +72,13 @@ def pagerank(
     """
     spark = graph.edges.sparkSession
     loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, max_supersteps, checkpoint_every,
-        resume=resume,
+        spark, job_name, checkpoint_dir, max_supersteps, resume=resume
     )
 
     n = graph.num_vertices()
     if n == 0:
         raise ValueError("pagerank: graph has no vertices")
-    adj = graph.adjacency()
+    adj = graph.adjacency().select("vid", "nbrs")
 
     def init():
         # --- superstep 0 (compute0, PageRank.java:64-77) -----------------
@@ -160,7 +158,6 @@ def personalized_pagerank(
     alpha: float = ALPHA_DEFAULT,
     supersteps: int = 6,
     checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
     job_name: str = "ppr",
     resume: bool = False,
 ) -> DataFrame:
@@ -202,11 +199,8 @@ def personalized_pagerank(
     if supersteps < 1:
         raise ValueError("personalized_pagerank: supersteps >= 1")
 
-    loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, supersteps, checkpoint_every,
-        resume=resume,
-    )
-    adj = graph.adjacency()
+    loop = SuperstepLoop(spark, job_name, checkpoint_dir, supersteps, resume=resume)
+    adj = graph.adjacency().select("vid", "nbrs")
 
     def init():
         # ONE pass over the degrees ⟕ broadcast(seeds) frame sizes the

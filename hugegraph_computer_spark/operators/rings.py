@@ -23,8 +23,9 @@ per-superstep union. All array ops (element_at, array_contains,
 array_min, concat) are JVM-side; one materialization per superstep.
 Scale note: path-flooding is exponential in dense graphs (inherent to the
 algorithm, not the engine); the reference ships it for small/sparse
-motif-mining graphs and so do we — ``max_ring_length`` caps the walk depth
-(None = reference behavior, unbounded).
+motif-mining graphs and so do we — ``max_supersteps`` caps the walk depth:
+a ring recorded at superstep s has s+1 entries, so ``max_supersteps=L``
+records exactly the rings of at most L entries.
 """
 
 from __future__ import annotations
@@ -39,7 +40,6 @@ from hugegraph_computer_spark.graph.graph import Graph
 
 def rings_detection(
     graph: Graph,
-    max_ring_length: int | None = None,
     max_supersteps: int = 50,
     spread_cond: str | None = None,
     checkpoint_dir: str | None = None,
@@ -65,8 +65,7 @@ def rings_detection(
     # edge columns gating every send, superstep 0 included. The filter and
     # projection sit over the cached src-partitioned frame (Graph.
     # flat_edges), so per-superstep joins re-shuffle only the frontier.
-    edges = (graph.flat_edges(all_cols=True)
-             if spread_cond is not None else graph.flat_edges())
+    edges = graph.flat_edges()
     if spread_cond is not None:
         edges = edges.where(F.expr(spread_cond))
     edges = edges.select("src", "dst")
@@ -79,7 +78,7 @@ def rings_detection(
         )
 
     def step(s: int, paths: DataFrame, _rings) -> tuple[DataFrame, DataFrame]:
-        fwd, new_rings = _close_or_extend(paths, max_ring_length)
+        fwd, new_rings = _close_or_extend(paths)
         nxt = (
             fwd.join(edges, fwd["cur"] == edges["src"])
             .where(F.col("dst") >= F.element_at("seq", 1))
@@ -92,13 +91,10 @@ def rings_detection(
     )
 
 
-def _close_or_extend(
-    paths: DataFrame, max_ring_length: int | None, *carry: str
-) -> tuple[DataFrame, DataFrame]:
+def _close_or_extend(paths: DataFrame, *carry: str) -> tuple[DataFrame, DataFrame]:
     """Split the paths arriving at ``cur``: the ones that close a ring
     there — recorded iff ``cur`` is the min of the whole path — and the
-    ones that extend by ``cur`` (no repeated vertex, under the length
-    cap) and travel on."""
+    ones that extend by ``cur`` (no repeated vertex) and travel on."""
     root = F.element_at("seq", 1)
     closed = paths.where(F.col("cur") == root)
     new_rings = (
@@ -111,8 +107,6 @@ def _close_or_extend(
     fwd = paths.where(
         (F.col("cur") != root) & ~F.array_contains("seq", F.col("cur"))
     ).select("cur", F.concat("seq", F.array(F.col("cur"))).alias("seq"), *carry)
-    if max_ring_length is not None:
-        fwd = fwd.where(F.size("seq") < max_ring_length)
     return fwd, new_rings
 
 
@@ -143,7 +137,6 @@ def rings_detection_with_filter(
     graph: Graph,
     describe: str | dict,
     vertex_props: DataFrame | None = None,
-    max_ring_length: int | None = None,
     max_supersteps: int = 50,
     checkpoint_dir: str | None = None,
     resume: bool = False,
@@ -171,7 +164,7 @@ def rings_detection_with_filter(
     from hugegraph_computer_spark.operators.path_filter import RingsFilter
 
     rf = RingsFilter(describe)
-    edges = graph.flat_edges(all_cols=True)  # cached static join side
+    edges = graph.flat_edges()  # cached static join side
     carry = rf.carry_props
     missing = [p for p in carry if p not in edges.columns]
     if missing:
@@ -205,7 +198,7 @@ def rings_detection_with_filter(
 
     def step(s: int, paths: DataFrame, _rings) -> tuple[DataFrame, DataFrame]:
         fwd, new_rings = _close_or_extend(
-            gate_arrivals(paths), max_ring_length, *[f"in_{p}" for p in carry]
+            gate_arrivals(paths), *[f"in_{p}" for p in carry]
         )
         stepped = fwd.join(edges, fwd["cur"] == edges["src"])
         nxt = stepped.where(F.expr(edge_cond_msg)).select(
@@ -220,9 +213,16 @@ def rings_detection_with_filter(
     )
 
 
-def rings_count(graph: Graph, **kw) -> DataFrame:
-    """Per-vertex ring count ``(vid long, n_rings long)`` (0 if none)."""
-    r = rings_detection(graph, **kw)
+def rings_count(
+    graph: Graph,
+    max_supersteps: int = 50,
+    spread_cond: str | None = None,
+    checkpoint_dir: str | None = None,
+    resume: bool = False,
+) -> DataFrame:
+    """Per-vertex ring count ``(vid long, n_rings long)`` (0 if none) of
+    :func:`rings_detection` run with the same arguments."""
+    r = rings_detection(graph, max_supersteps, spread_cond, checkpoint_dir, resume)
     counts = r.groupBy("vid").agg(F.count(F.lit(1)).cast("long").alias("n_rings"))
     return (
         graph.vertices()

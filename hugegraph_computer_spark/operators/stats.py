@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, functions as F
 from hugegraph_computer_spark.graph.graph import Graph
 
 
-def graph_stats(graph: Graph, round_to: int = 6) -> DataFrame:
+def graph_stats(graph: Graph) -> DataFrame:
     """``(stat string, value double)`` rows: n_vertices, sym_edges,
     max_degree, avg_degree (symmetrized-degree statistics, isolated
     vertices included at degree 0)."""
@@ -36,7 +36,7 @@ def graph_stats(graph: Graph, round_to: int = 6) -> DataFrame:
                 row("n_vertices", F.col("nv")),
                 row("sym_edges", F.col("ne")),
                 row("max_degree", F.col("mx")),
-                row("avg_degree", F.round(F.col("ne") / F.col("nv"), round_to)),
+                row("avg_degree", F.round(F.col("ne") / F.col("nv"), 6)),
             )
         ).alias("kv")
     ).select(F.col("kv.stat").alias("stat"), F.col("kv.value").alias("value"))

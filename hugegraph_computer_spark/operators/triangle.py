@@ -36,9 +36,7 @@ def _undirected(graph: Graph) -> DataFrame:
     )
 
 
-def triangle_count(
-    graph: Graph, job_name: str = "triangle_count", algorithm: str = "oriented"
-) -> DataFrame:
+def triangle_count(graph: Graph, algorithm: str = "oriented") -> DataFrame:
     """Returns ``(vid long, triangles long)`` per vertex (0 if none).
 
     ``algorithm="oriented"`` (DEFAULT — the scale path): orient every edge

@@ -86,7 +86,7 @@ def random_walks(
     from hugegraph_computer_spark.graph.graph import DEFAULT_ADJ_CHUNK
 
     chunk = DEFAULT_ADJ_CHUNK
-    adj = graph.adjacency(chunk=chunk, keep_chunk_no=True).select(
+    adj = graph.adjacency().select(
         F.col("vid").alias("avid"), "chunk_no", "nbrs", "deg"
     )
 

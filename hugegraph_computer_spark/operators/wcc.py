@@ -36,7 +36,6 @@ def wcc(
     graph: Graph,
     max_supersteps: int = 100,
     checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
     job_name: str = "wcc",
     resume: bool = False,
 ) -> DataFrame:
@@ -44,10 +43,9 @@ def wcc(
     min vid in the weakly connected component (isolated vertex → itself)."""
     spark = graph.edges.sparkSession
     loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, max_supersteps, checkpoint_every,
-        resume=resume,
+        spark, job_name, checkpoint_dir, max_supersteps, resume=resume
     )
-    adj = graph.adjacency()
+    adj = graph.adjacency().select("vid", "nbrs")
 
     def init():
         # superstep 0 (Wcc.java:47-60): label = min(self, neighbors).

@@ -121,7 +121,6 @@ def corpus_graph(
     g = Graph.from_edges(
         edges,
         symmetrize=symmetrize,
-        dedup=True,
         vertices=ids.select("vid"),
         num_partitions=num_partitions,
     )

@@ -11,7 +11,7 @@ import numpy as np
 
 def symmetrize(edges: list[tuple[int, int]], drop_self_loops: bool = False) -> dict[int, list[int]]:
     """directed edge list → dedup'd symmetric adjacency (sorted neighbor
-    lists), matching Graph.from_edges(symmetrize=True, dedup=True)."""
+    lists), matching Graph.from_edges(symmetrize=True) (edge_freq="single")."""
     s = set()
     for u, v in edges:
         if drop_self_loops and u == v:

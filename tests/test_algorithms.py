@@ -65,7 +65,7 @@ def test_degree_centrality_golden(spark):
 def test_weighted_degree(spark):
     rows = [(s, d, float(w)) for (s, d), w in zip(F2_EDGES, range(1, 9))]
     df = spark.createDataFrame(rows, "src long, dst long, w double")
-    g = Graph.from_edges(df, weight_col="w", dedup=False, num_partitions=8)
+    g = Graph.from_edges(df, weight_col="w", edge_freq="multiple", num_partitions=8)
     got = df_to_dict(degree_centrality(g, weighted=True), "vid", "degree")
     # symmetrized multiset: each directed edge contributes w to both ends
     exp = {0: 1 + 2 + 5, 1: 1 + 3, 2: 2 + 3 + 4 + 8, 3: 4 + 5 + 6 + 7, 4: 6 + 7 + 8}

@@ -6,7 +6,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.graph.graph import Graph
+from hugegraph_computer_spark.graph.graph import DEFAULT_ADJ_CHUNK, Graph
 from hugegraph_computer_spark.operators import (
     degree_centrality,
     lpa,
@@ -48,18 +48,20 @@ def test_two_isolated_cliques_lpa_stable(spark):
 
 
 def test_star_graph_hub_chunking(spark):
-    # hub with 600 spokes; chunk=64 forces multi-row adjacency
-    edges = [(0, i) for i in range(1, 601)]
+    # hub with 10,000 spokes: more than DEFAULT_ADJ_CHUNK forces a
+    # multi-row adjacency
+    spokes = 10_000
+    edges = [(0, i) for i in range(1, spokes + 1)]
     df = spark.createDataFrame(edges, "src long, dst long")
     g = Graph.from_edges(df, num_partitions=4)
-    adj = g.adjacency(chunk=64)
+    adj = g.adjacency()
     hub_rows = adj.where("vid = 0").collect()
-    assert len(hub_rows) == 10  # ceil(600/64)
-    assert all(r["deg"] == 600 for r in hub_rows)
-    assert sum(len(r["nbrs"]) for r in hub_rows) == 600
+    assert len(hub_rows) == -(-spokes // DEFAULT_ADJ_CHUNK) == 3
+    assert all(r["deg"] == spokes for r in hub_rows)
+    assert sum(len(r["nbrs"]) for r in hub_rows) == spokes
     # chunked scatter still sums exactly: degree via chunked adjacency
     total = adj.select(F.explode("nbrs")).count()
-    assert total == 1200  # symmetrized star
+    assert total == 2 * spokes  # symmetrized star
 
 
 @settings(
@@ -116,10 +118,9 @@ def test_mega_hub_skew_pagerank_and_wcc(spark):
     edges = hub_edges + ring
     df = spark.createDataFrame(edges, "src long, dst long")
     g = Graph.from_edges(df, num_partitions=8)
-    # force multi-chunk hub rows
-    adj = g.adjacency(chunk=1024)
-    hub_chunks = adj.where("vid = 0").count()
-    assert hub_chunks == 20  # ceil(20000/1024)
+    # the hub spans several chunk rows
+    hub_chunks = g.adjacency().where("vid = 0").count()
+    assert hub_chunks == -(-20_000 // DEFAULT_ADJ_CHUNK) == 5
 
     adjacency = symmetrize(edges)
     vs = sorted(adjacency)

@@ -93,8 +93,8 @@ def test_links_traversal(spark):
     # weighted chain + branch; spread only along weight>=2; end at vid>=4
     rows = [(0, 1, 5.0), (1, 2, 3.0), (2, 4, 2.0), (1, 3, 1.0), (3, 5, 9.0)]
     df = spark.createDataFrame(rows, "src long, dst long, weight double")
-    g = Graph.from_edges(df, weight_col="weight", symmetrize=False, dedup=False,
-                         num_partitions=4)
+    g = Graph.from_edges(df, weight_col="weight", symmetrize=False,
+                         edge_freq="multiple", num_partitions=4)
     out = links(
         g,
         start_cond="vid = 0",
@@ -112,8 +112,8 @@ def test_links_end_edge(spark):
     from hugegraph_computer_spark.operators import links
     rows = [(0, 1, 1.0), (1, 2, 7.0)]
     df = spark.createDataFrame(rows, "src long, dst long, weight double")
-    g = Graph.from_edges(df, weight_col="weight", symmetrize=False, dedup=False,
-                         num_partitions=4)
+    g = Graph.from_edges(df, weight_col="weight", symmetrize=False,
+                         edge_freq="multiple", num_partitions=4)
     out = links(g, start_cond="vid = 0", spread_cond="true",
                 end_edge_cond="weight > 5")
     rows_out = [(r["vid"], tuple(r["path"])) for r in out.collect()]

@@ -71,14 +71,11 @@ def test_closeness_weighted_resume_bit_identical(spark, tmp_path):
 
 
 def test_closeness_delta_layout_forces_durable_every_step(spark, tmp_path):
-    """Every unweighted superstep's delta must be durable — a sparser
-    checkpoint_every would silently drop settled pairs on resume
-    (ADVICE r3 #1) — so the layout forces checkpoint_every=1."""
+    """Every unweighted superstep's delta must be durable — a skipped
+    snapshot would silently drop settled pairs on resume (ADVICE r3 #1)."""
     g = _chain_graph(spark, n=7)
     ck = str(tmp_path / "ccE")
-    closeness_centrality(
-        g, checkpoint_dir=ck, checkpoint_every=3, job_name="ccE4"
-    ).collect()
+    closeness_centrality(g, checkpoint_dir=ck, job_name="ccE4").collect()
     steps = sorted(
         int(s.split("=", 1)[1]) for s in os.listdir(os.path.join(ck, "ccE4"))
     )
@@ -926,8 +923,7 @@ def test_decontaminate_matches_python_oracle(spark):
 
 
 def test_decontaminate_broadcast_plan_and_fallback(spark):
-    """Default plan broadcasts the benchmark gram set; the fallback for a
-    corpus-sized right side shuffles instead."""
+    """The plan broadcasts the benchmark gram set and counts exactly."""
     from hugegraph_computer_spark.operators.dedup import decontaminate
 
     train = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
@@ -937,9 +933,7 @@ def test_decontaminate_broadcast_plan_and_fallback(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in p_b
-    rows = decontaminate(
-        train, bench, shingle_n=3, broadcast_benchmark=False
-    ).collect()
+    rows = decontaminate(train, bench, shingle_n=3).collect()
     assert rows[0].hits == 1 and rows[0].n_grams == 2
     with pytest.raises(ValueError):
         decontaminate(train, bench, shingle_n=0)

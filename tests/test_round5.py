@@ -24,7 +24,7 @@ def hub_graph(spark):
 
 
 def test_hub_adjacency_is_chunked(spark, hub_graph):
-    adj = hub_graph.adjacency(keep_chunk_no=True)
+    adj = hub_graph.adjacency()
     hub_rows = adj.where(F.col("vid") == 0)
     assert hub_rows.count() == -(-HUB_DEG // DEFAULT_ADJ_CHUNK)
     stats = hub_rows.agg(
@@ -103,7 +103,7 @@ def test_hub_neighborhood_sample_dedups_duplicate_across_chunks(spark):
         [(0, d) for d in range(1, n + 1)] + [(0, dup)], "src long, dst long"
     )
     g = Graph.from_edges(edges, symmetrize=False, edge_freq="multiple")
-    chunks = g.adjacency(keep_chunk_no=True).where(F.col("vid") == 0).collect()
+    chunks = g.adjacency().where(F.col("vid") == 0).collect()
     assert sorted(dup in r["nbrs"] for r in chunks) == [True, True]
 
     def rank(d):

@@ -3,13 +3,15 @@
 Runs every ``__spark_entry__.queries()`` entry on Spark at sf0.01 and the
 matching ``oracle_sql()`` on DuckDB over the same parquet, then compares
 row count, column names, and order-insensitive values (columns sorted by
-name, rows sorted). Usage:
+name, rows sorted). Every ``OK``/``ROWS`` line ends with ``md5=<12 hex>``
+of the normalized Spark frame, so two gate logs diff row for row. Usage:
 
     python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import sys
 import time
 from pathlib import Path
@@ -32,6 +34,12 @@ TABLES = [
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)]
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+
+
+def digest(df: pd.DataFrame) -> str:
+    """md5 (12 hex) of the normalized frame's CSV form."""
+    csv = normalize(df).to_csv(index=False)
+    return "md5=" + hashlib.md5(csv.encode()).hexdigest()[:12]
 
 
 def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
@@ -99,7 +107,8 @@ def check(spark, sf_dir: str, only=()) -> dict[str, list[str]]:
             continue
         t_spark = time.time() - t0
         if name not in oracles:
-            print(f"ROWS  {name}: {len(sdf)} rows (no oracle) [{t_spark:.1f}s]")
+            print(f"ROWS  {name}: {len(sdf)} rows (no oracle) [{t_spark:.1f}s] "
+                  f"{digest(sdf)}")
             continue
         t0 = time.time()
         try:
@@ -115,7 +124,8 @@ def check(spark, sf_dir: str, only=()) -> dict[str, list[str]]:
             for p in problems:
                 print(f"      {p}")
         else:
-            print(f"OK    {name}: {len(sdf)} rows [{t_spark:.1f}s/{t_duck:.1f}s]")
+            print(f"OK    {name}: {len(sdf)} rows [{t_spark:.1f}s/{t_duck:.1f}s] "
+                  f"{digest(sdf)}")
     con.close()
     return results
 
