@@ -11,10 +11,11 @@ aggregator/WorkerAggrManager.java:89-141).
 That master loop exists once, in two drivers:
 
 * ``SuperstepLoop.run(init, step, halt)`` for every full-state operator
-  (pagerank, personalized_pagerank, wcc, lpa, coreness, weighted
-  closeness, ``graph.program.run_program``): each operator supplies only
-  its superstep-0 plan, its per-superstep plan with the aggregators to
-  observe, and its stop rule;
+  (pagerank, personalized_pagerank, lpa, coreness, weighted closeness,
+  and ``graph.program.run_program``, which runs wcc and every other
+  ``VertexProgram``): each operator supplies only its superstep-0 plan,
+  its per-superstep plan with the aggregators to observe, and its stop
+  rule; the message-passing ones send through ``Graph.scatter``;
 * ``SuperstepLoop.flood(init, step, record)`` for every replay-resume
   flood (rings, rings with filter, links, random and node2vec walks,
   unweighted closeness, the forward BFS of betweenness) and for the

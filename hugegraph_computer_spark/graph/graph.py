@@ -7,8 +7,11 @@ Mirrors the reference's runtime data model (SURVEY.md §1) without porting it:
   (computer-core/.../compute/FileGraphPartition.java:96-122, 302-339);
   we keep ``edges(src long, dst long [, weight double])`` and two derived,
   cached frames: ``adjacency()`` ``(vid, chunk_no, nbrs array<long>, deg)``
-  for the scatter family and ``flat_edges()`` (every edge column) for the
-  floods. Callers select the columns they read.
+  and ``flat_edges()`` (every edge column) for the floods. Callers select
+  the columns they read. ``scatter(frontier)`` is the adjacency's reader
+  for message passing — the send step of pagerank, ppr, lpa and every
+  ``VertexProgram`` (wcc included); only the samplers (random walks,
+  neighborhood sampling) index its chunks directly.
 * the reference symmetrizes the graph at load by default — for every loaded
   edge u→v it also creates v→u with property inv=true
   (computer-core/.../input/WorkerInputManager.java:104-122), so all
@@ -33,10 +36,11 @@ Mirrors the reference's runtime data model (SURVEY.md §1) without porting it:
   salting).
 
 Scale notes (100 TB / 10^12 files): edges and adjacency are hash-partitioned
-by vertex id (``repartition(n, src)``), so the per-superstep scatter join
-state ⋈ adjacency is co-partitioned and does not reshuffle the (large,
+by vertex id (``repartition(n, src)``), so ``scatter``'s per-superstep join
+frontier ⋈ adjacency is co-partitioned and does not reshuffle the (large,
 static) adjacency side; only the small per-superstep state/message tables
-move. Dense id encoding is a one-off sort-based job (order-preserving), so
+move. That join is the one place a join strategy for the adjacency is
+chosen. Dense id encoding is a one-off sort-based job (order-preserving), so
 "min id" component labels stay comparable with the reference's id order.
 """
 
@@ -338,8 +342,8 @@ class Graph:
         random_walks uses.
 
         One frame is cached per graph; callers select the columns they
-        read (the scatter family reads ``vid, nbrs``), and the projection
-        keeps the cached partitioning.
+        read (``scatter`` reads ``vid, nbrs``), and the projection keeps
+        the cached partitioning.
         """
         if self._adj is None:
             chunk = DEFAULT_ADJ_CHUNK
@@ -376,6 +380,22 @@ class Graph:
                 .persist()
             )
         return self._adj
+
+    def scatter(self, frontier: DataFrame) -> DataFrame:
+        """Send along every edge of the frontier's vertices:
+        ``(*frontier.columns, dst)``, one row per (frontier vertex,
+        neighbor) — the reference's ``sendMessageToAllEdges``.
+
+        ``frontier`` carries ``vid`` plus the columns the message is built
+        from. Every message-passing operator sends through here: the
+        frontier joins the cached chunked adjacency on ``vid`` and
+        ``nbrs`` explodes per chunk, so a hub's fan-out is split across rows and a
+        ``groupBy("dst")`` over the result partial-aggregates per chunk
+        (the send-side combiner)."""
+        adj = self.adjacency().select("vid", "nbrs")
+        return adj.join(frontier, "vid").select(
+            *frontier.columns, F.explode("nbrs").alias("dst")
+        )
 
     def flat_edges(self) -> DataFrame:
         """Every edge column (src, dst, weights, labels, carry props, edge

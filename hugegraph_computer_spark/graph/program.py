@@ -16,10 +16,12 @@ Observation-carried aggregators, checkpoint/resume, frontier (vote-to-halt)
 messaging.
 
     VertexProgram(
-        init,          # vertices DF -> state DF (must keep vid; superstep-0
-                       #   value init ≡ compute0)
-        message,       # (frontier-joined scatter row) -> message column expr
+        init,          # Graph -> state DF (vid, <state cols>, active)
+                       #   ≡ compute0; may read the graph's edges (wcc's
+                       #   label = min(self, neighbors), Wcc.java:47-60)
+        message,       # (scatter row) -> message column expr
                        #   ≡ sendMessageToAllEdges; rows are
+                       #   Graph.scatter(active state) =
                        #   (vid, <state cols>, dst) per (frontier × edge)
         combine,       # list of agg Columns over groupBy(dst)
                        #   ≡ worker.combiner_class (sum/min/max/...)
@@ -30,9 +32,12 @@ messaging.
         master_continue,  # (superstep, aggs dict) -> bool ≡ MasterComputation
     )
 
-``run_program`` adapts a program to ``SuperstepLoop.run``, the one superstep
-loop the built-ins (pagerank/wcc/lpa/coreness) drive too; they hand it
-their own ``step`` plans only to pin exact reference formulas.
+``run_program`` adapts a program to ``SuperstepLoop.run``. ``operators.wcc``
+is a VertexProgram run this way. PageRank, personalized PageRank and LPA
+drive ``SuperstepLoop.run`` with their own step plans, because their apply
+does not fit the contract: PageRank's reads the previous superstep's
+aggregates, LPA's vote groups twice. All of them send through
+``Graph.scatter``.
 """
 
 from __future__ import annotations
@@ -50,7 +55,7 @@ from hugegraph_computer_spark.graph.graph import Graph
 class VertexProgram:
     """A BSP vertex program as DataFrame plan fragments."""
 
-    init: Callable[[DataFrame], DataFrame]
+    init: Callable[[Graph], DataFrame]
     message: Callable[[DataFrame], Column]
     combine: Callable[[], list[Column]]
     apply: Callable[[DataFrame, DataFrame], DataFrame]
@@ -69,29 +74,25 @@ def run_program(
     """Run a VertexProgram on ``SuperstepLoop.run``.
 
     State contract: ``init`` returns (vid, ..., active boolean); each
-    superstep scatters messages from active vertices along the (cached,
-    co-partitioned) adjacency, combines per target, applies, and stops
-    when no vertex is active (vote-to-halt, MasterService.finishedIteration
-    :332-343) or ``master_continue`` returns False.
+    superstep scatters messages from active vertices (``Graph.scatter``),
+    combines per target, applies, and stops when ``master_continue``
+    returns False or no vertex is active. The master is consulted every
+    superstep, before the vote-to-halt check (MasterService.java:258-261
+    runs the master computation, then :332-343 finishedIteration).
     """
     spark = graph.edges.sparkSession
     loop = SuperstepLoop(
         spark, program.name, checkpoint_dir, max_supersteps, resume=resume
     )
-    adj = graph.adjacency().select("vid", "nbrs")
 
     def init():
-        state = program.init(graph.vertices())
+        state = program.init(graph)
         if "vid" not in state.columns or "active" not in state.columns:
             raise ValueError("init must produce (vid, ..., active)")
         return state, {}
 
     def step(s, state, aggs):
-        frontier = state.where("active")
-        scatter = adj.join(frontier, "vid").select(
-            *[frontier[c] for c in state.columns if c != "active"],
-            F.explode("nbrs").alias("dst"),
-        )
+        scatter = graph.scatter(state.where("active").drop("active"))
         msgs = (
             scatter.select(F.col("dst"), program.message(scatter).alias("msg"))
             .groupBy("dst")
@@ -104,56 +105,7 @@ def run_program(
 
     def halt(s, aggs):
         user = {k: v for k, v in aggs.items() if k != "__active__"}
-        return not aggs["__active__"] or not program.master_continue(s, user)
+        return not program.master_continue(s, user) or not aggs["__active__"]
 
     return loop.run(init, step, halt)
 
-
-# ---------------------------------------------------------------- examples
-def wcc_program() -> VertexProgram:
-    """WCC as a VertexProgram — the protocol twin of operators.wcc
-    (Wcc.java:34-73 semantics; min-combiner, vote-to-halt)."""
-    return VertexProgram(
-        name="wcc_program",
-        init=lambda v: v.select(
-            "vid", F.col("vid").alias("label"), F.lit(True).alias("active")
-        ),
-        message=lambda scatter: scatter["label"],
-        combine=lambda: [F.min("msg").alias("msg")],
-        apply=lambda state, msgs: (
-            state.join(msgs, state["vid"] == msgs["dst"], "left")
-            .select(
-                state["vid"],
-                F.least(
-                    state["label"], F.coalesce(msgs["msg"], state["label"])
-                ).alias("new_label"),
-                state["label"].alias("old_label"),
-            )
-            .select(
-                "vid",
-                F.col("new_label").alias("label"),
-                (F.col("new_label") < F.col("old_label")).alias("active"),
-            )
-        ),
-    )
-
-
-def degree_program(weighted: bool = False) -> VertexProgram:
-    """Degree centrality as a single-superstep VertexProgram
-    (DegreeCentrality.java:38-131: everyone scatters 1, sum, halt)."""
-    return VertexProgram(
-        name="degree_program",
-        init=lambda v: v.select(
-            "vid", F.lit(0.0).alias("degree"), F.lit(True).alias("active")
-        ),
-        message=lambda scatter: F.lit(1.0),
-        combine=lambda: [F.sum("msg").alias("msg")],
-        apply=lambda state, msgs: (
-            state.join(msgs, state["vid"] == msgs["dst"], "left")
-            .select(
-                state["vid"],
-                F.coalesce(msgs["msg"], F.lit(0.0)).alias("degree"),
-                F.lit(False).alias("active"),
-            )
-        ),
-    )

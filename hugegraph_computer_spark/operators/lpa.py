@@ -18,7 +18,7 @@ messaging), not a live view of all neighbor labels.
 
 One superstep:
 
-    msgs  = adjacency(changed vertices) → explode → (dst, label)
+    msgs  = Graph.scatter(changed vertices) → (vid, label, dst)
     vote  = msgs.groupBy(dst, label).count()
               .groupBy(dst).agg(max(struct(cnt, -label)))   -- argmax with
                                                             -- min-label ties,
@@ -50,22 +50,19 @@ def lpa(
     loop = SuperstepLoop(
         spark, job_name, checkpoint_dir, max_supersteps, resume=resume
     )
-    adj = graph.adjacency().select("vid", "nbrs")
 
     def init():
         # superstep 0 (Lpa.java:52-58): label = self id, everyone sends.
         state = graph.vertices().select(
             "vid", F.col("vid").alias("label"), F.lit(True).alias("changed")
         )
-        return state, {"senders": graph.num_vertices()}
+        return state, {}
 
     def step(s, state, aggs):
         senders = state.where("changed").select("vid", "label")
-        msgs = adj.join(senders, "vid").select(
-            F.explode("nbrs").alias("dst"), "label"
-        )
         vote = (
-            msgs.groupBy("dst", "label")
+            graph.scatter(senders)
+            .groupBy("dst", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .groupBy("dst")
             .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("best"))

@@ -23,8 +23,10 @@ allclose 1e-6:
 
 Spark realization: state is ``(vid, rank, deg)``; one superstep =
 
-    msgs    = adjacency ⋈ contrib(vid, rank/deg)   -- co-partitioned join
-    summed  = msgs.explode(nbrs).groupBy(dst).sum  -- map-side partial agg
+    summed  = _push(state)                         -- Graph.scatter of
+                                                   -- (vid, rank/deg), then
+                                                   -- groupBy(dst).sum with a
+                                                   -- map-side partial agg
                                                    -- ≡ DoubleValueSumCombiner
                                                    -- (PageRankParams.java:40-41)
     state'  = state ⟕ summed → new rank column
@@ -54,6 +56,17 @@ def _dangling_mass():
     return F.sum(F.when(F.col("deg") == 0, F.col("rank")).otherwise(0.0))
 
 
+def _push(graph: Graph, state: DataFrame) -> DataFrame:
+    """(dst, msg_sum): Σ rank/deg over each vertex's neighbors — every
+    non-dangling vertex scatters its share and the sum combines it."""
+    contrib = state.where(F.col("deg") > 0).select(
+        "vid", (F.col("rank") / F.col("deg")).alias("contrib")
+    )
+    return (
+        graph.scatter(contrib).groupBy("dst").agg(F.sum("contrib").alias("msg_sum"))
+    )
+
+
 def pagerank(
     graph: Graph,
     alpha: float = ALPHA_DEFAULT,
@@ -78,7 +91,6 @@ def pagerank(
     n = graph.num_vertices()
     if n == 0:
         raise ValueError("pagerank: graph has no vertices")
-    adj = graph.adjacency().select("vid", "nbrs")
 
     def init():
         # --- superstep 0 (compute0, PageRank.java:64-77) -----------------
@@ -100,15 +112,7 @@ def pagerank(
         teleport = alpha / n
         cumulative = aggs["cumulative"]
 
-        contrib = state.where(F.col("deg") > 0).select(
-            "vid", (F.col("rank") / F.col("deg")).alias("contrib")
-        )
-        msgs = (
-            adj.join(contrib, "vid")
-            .select(F.explode("nbrs").alias("dst"), "contrib")
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("msg_sum"))
-        )
+        msgs = _push(graph, state)
         new_state = (
             state.join(msgs, state["vid"] == msgs["dst"], "left")
             .select(
@@ -178,8 +182,8 @@ def personalized_pagerank(
     reference recurrence above). Fixed ``supersteps`` keeps the run
     oracle-unrollable (oracles.ppr_sql).
 
-    Scale shape = pagerank's: one scatter (adj ⋈ contrib, explode,
-    map-side partial agg) + one left join per superstep, the dangling
+    Scale shape = pagerank's: one ``_push`` (the same scatter and
+    map-side partial sum) + one left join per superstep, the dangling
     aggregate rides the single materialization via ``observe``, lineage
     broken per superstep through SuperstepLoop (checkpoint_dir/resume).
     ``sources`` may be a Python iterable of vids or a DataFrame with a
@@ -200,7 +204,6 @@ def personalized_pagerank(
         raise ValueError("personalized_pagerank: supersteps >= 1")
 
     loop = SuperstepLoop(spark, job_name, checkpoint_dir, supersteps, resume=resume)
-    adj = graph.adjacency().select("vid", "nbrs")
 
     def init():
         # ONE pass over the degrees ⟕ broadcast(seeds) frame sizes the
@@ -238,15 +241,7 @@ def personalized_pagerank(
         return state, {"dangling": int(row["n_dang"]) / n_src}
 
     def step(s, state, aggs):
-        contrib = state.where(F.col("deg") > 0).select(
-            "vid", (F.col("rank") / F.col("deg")).alias("contrib")
-        )
-        msgs = (
-            adj.join(contrib, "vid")
-            .select(F.explode("nbrs").alias("dst"), "contrib")
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("msg_sum"))
-        )
+        msgs = _push(graph, state)
         new_state = state.join(msgs, state["vid"] == msgs["dst"], "left").select(
             state["vid"],
             state["deg"],

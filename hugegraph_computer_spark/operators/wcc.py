@@ -11,12 +11,14 @@ reaches the identical fixpoint (exact-match parity) with a *frontier*
 optimization the reference gets from vote-to-halt: only vertices whose
 label changed last round scatter (SURVEY.md §4 "delta iteration").
 
-One superstep:
+The algorithm is one ``VertexProgram`` run by ``run_program``, the
+engine's §2.10 extension API — the reference's ``Wcc`` computation with
+the ``ValueMinCombiner`` as its combiner class. One superstep:
 
-    msgs  = adjacency(frontier) → explode → groupBy(dst).min(label)
+    msgs  = Graph.scatter(frontier) → groupBy(dst).min(label)
             -- min() ≡ ValueMinCombiner, applied map-side (partial agg)
     state = state ⟕ msgs; label' = least(label, msg)
-    frontier = rows where label' < label; stop when empty
+    active = label' < label; stop when no vertex is active
 
 The frontier is typically a tiny fraction of V after a few rounds, so the
 scatter join's streamed side shrinks every superstep while the cached,
@@ -28,8 +30,46 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 from hugegraph_computer_spark.graph.graph import Graph
+from hugegraph_computer_spark.graph.program import VertexProgram, run_program
+
+
+def _init(graph: Graph) -> DataFrame:
+    # superstep 0 (Wcc.java:47-60): label = min(self, neighbors).
+    nbr_min = (
+        graph.adjacency()
+        .select("vid", F.array_min("nbrs").alias("m"))
+        .groupBy("vid")
+        .agg(F.min("m").alias("nbr_min"))
+    )
+    return graph.vertices().join(nbr_min, "vid", "left").select(
+        "vid",
+        F.least(F.col("vid"), F.coalesce("nbr_min", F.col("vid"))).alias("label"),
+        # at ss0 everyone scatters (sendMessageToAllEdgesIf with the
+        # label<target filter is an optimization the min-combiner makes
+        # redundant).
+        F.lit(True).alias("active"),
+    )
+
+
+def _apply(state: DataFrame, msgs: DataFrame) -> DataFrame:
+    # adopt a smaller incoming label; only a vertex whose label fell
+    # scatters next superstep (vote-to-halt)
+    return (
+        state.join(msgs, state["vid"] == msgs["dst"], "left")
+        .select(
+            state["vid"],
+            F.least(state["label"], F.coalesce(msgs["msg"], state["label"])).alias(
+                "new_label"
+            ),
+            state["label"].alias("old_label"),
+        )
+        .select(
+            "vid",
+            F.col("new_label").alias("label"),
+            (F.col("new_label") < F.col("old_label")).alias("active"),
+        )
+    )
 
 
 def wcc(
@@ -41,61 +81,12 @@ def wcc(
 ) -> DataFrame:
     """Run WCC; returns ``(vid long, component long)`` — component is the
     min vid in the weakly connected component (isolated vertex → itself)."""
-    spark = graph.edges.sparkSession
-    loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, max_supersteps, resume=resume
+    program = VertexProgram(
+        name=job_name,
+        init=_init,
+        message=lambda scatter: scatter["label"],
+        combine=lambda: [F.min("msg").alias("msg")],
+        apply=_apply,
     )
-    adj = graph.adjacency().select("vid", "nbrs")
-
-    def init():
-        # superstep 0 (Wcc.java:47-60): label = min(self, neighbors).
-        nbr_min = (
-            adj.select("vid", F.array_min("nbrs").alias("m"))
-            .groupBy("vid")
-            .agg(F.min("m").alias("nbr_min"))
-        )
-        state = (
-            graph.vertices()
-            .join(nbr_min, "vid", "left")
-            .select(
-                "vid",
-                F.least(F.col("vid"), F.coalesce("nbr_min", F.col("vid"))).alias(
-                    "label"
-                ),
-                # changed=true ⇒ this vertex scatters next round; at ss0
-                # everyone scatters (sendMessageToAllEdgesIf with the
-                # label<target filter is an optimization the min-combiner
-                # makes redundant).
-                F.lit(True).alias("changed"),
-            )
-        )
-        return state, {"changed": graph.num_vertices()}
-
-    def step(s, state, aggs):
-        frontier = state.where("changed").select("vid", "label")
-        msgs = (
-            adj.join(frontier, "vid")
-            .select(F.explode("nbrs").alias("dst"), "label")
-            .groupBy("dst")
-            .agg(F.min("label").alias("msg"))
-        )
-        new_state = (
-            state.join(msgs, state["vid"] == msgs["dst"], "left")
-            .select(
-                state["vid"],
-                F.least(state["label"], F.coalesce(msgs["msg"], state["label"])).alias(
-                    "new_label"
-                ),
-                state["label"].alias("old_label"),
-            )
-            .select(
-                "vid",
-                F.col("new_label").alias("label"),
-                (F.col("new_label") < F.col("old_label")).alias("changed"),
-            )
-        )
-        # changed-count aggregator rides the materialization job (observe)
-        return new_state, {"changed": F.sum(F.col("changed").cast("long"))}
-
-    state = loop.run(init, step, lambda s, aggs: not aggs["changed"])
+    state = run_program(graph, program, max_supersteps, checkpoint_dir, resume)
     return state.select("vid", F.col("label").alias("component"))

@@ -51,10 +51,9 @@ def test_filter_pushdown_to_parquet(spark, testdata_dir):
 
 def test_scatter_join_no_cartesian_and_no_adj_exchange(spark):
     g = make_graph(spark, random_edges(100, 300, seed=1))
-    adj = g.adjacency()
-    adj.count()
+    g.adjacency().count()
     contrib = g.degrees().select("vid", (1.0 / F.greatest("deg", F.lit(1))).alias("c"))
-    joined = adj.join(contrib, "vid")
+    joined = g.scatter(contrib)
     assert_no_cartesian(joined)
     # With broadcast allowed the small side is broadcast (shuffle-free);
     # force SMJ to assert the 100-TB-relevant property: the cached
@@ -63,7 +62,7 @@ def test_scatter_join_no_cartesian_and_no_adj_exchange(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = explain_str(adj.join(contrib, "vid"))
+        plan = explain_str(g.scatter(contrib))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     join_tail = plan.split("SortMergeJoin", 1)[-1]
@@ -155,14 +154,8 @@ def test_pagerank_scatter_has_partial_aggregate(spark):
     send-side combiner) — the plan needs two HashAggregates around the
     exchange, not a single post-shuffle aggregate."""
     g = make_graph(spark, random_edges(80, 240, seed=41))
-    adj = g.adjacency()
     contrib = g.degrees().select("vid", (1.0 / F.greatest("deg", F.lit(1))).alias("contrib"))
-    msgs = (
-        adj.join(contrib, "vid")
-        .select(F.explode("nbrs").alias("dst"), "contrib")
-        .groupBy("dst")
-        .agg(F.sum("contrib").alias("s"))
-    )
+    msgs = g.scatter(contrib).groupBy("dst").agg(F.sum("contrib").alias("s"))
     plan = explain_str(msgs)
     pre_exchange = plan.split("Exchange hashpartitioning(dst", 1)[0]
     assert "HashAggregate" in pre_exchange, plan[:2000]
