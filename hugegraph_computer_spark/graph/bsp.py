@@ -28,8 +28,10 @@ What the reference left as a TODO — resume (MasterService.java:213, 316-322)
 
 * with a checkpoint dir, EVERY superstep writes the full algorithm state
   to ``{dir}/{job}/superstep={s}/`` as parquet, plus a ``_meta.json`` carrying
-  the superstep id, the global aggregator values, per-partition row counts
-  (lineage), and wall-clock metrics;
+  the superstep id, the global aggregator values, per-file row counts
+  (lineage, read from the written files' parquet footers), and wall-clock
+  metrics. The write is the superstep's only Spark job: the read-back
+  reuses the written frame's schema instead of inferring it;
 * ``SuperstepLoop.resume()`` finds the latest *complete* snapshot (the meta
   file is written after the parquet commit, so a job killed mid-write
   resumes from the previous superstep) and the algorithm continues from it;
@@ -59,6 +61,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from functools import reduce
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 #: non-durable state generations kept pinned: the current one and the one
@@ -293,8 +296,13 @@ class SuperstepLoop:
         algorithms attach their global aggregators to the plan with
         ``DataFrame.observe`` so the aggregate ride-along costs no extra
         job (the reference ships partial aggregators with the compute
-        pass the same way, WorkerAggrManager.java:89-141). A non-durable
-        frame joins ``pinned`` when given, else the rolling window of
+        pass the same way, WorkerAggrManager.java:89-141). A durable
+        superstep runs the write and nothing else: the handle reads the
+        same files back under the schema just written, and the
+        ``partition_rows`` metric (one count per written file, summed into
+        ``rows``) comes from the parquet footers on the driver. Other
+        snapshot formats record no row counts. A non-durable frame joins
+        ``pinned`` when given, else the rolling window of
         ``RELEASE_WINDOW`` generations."""
         self._pending_metrics = {}
         if self.dir is not None:
@@ -302,17 +310,15 @@ class SuperstepLoop:
             if os.path.exists(path):
                 shutil.rmtree(path)
             state.write.mode("overwrite").format(self.snapshot_format).save(path)
-            out = self.spark.read.format(self.snapshot_format).load(path)
-            part_counts = [
-                int(r["cnt"])
-                for r in out.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            ]
-            self._pending_metrics = {
-                "partition_rows": part_counts,
-                "rows": sum(part_counts),
-            }
+            reader = self.spark.read.format(self.snapshot_format)
+            if self.snapshot_format == "parquet":
+                part_counts = _file_rows(path)
+                self._pending_metrics = {
+                    "partition_rows": part_counts,
+                    "rows": sum(part_counts),
+                }
+                reader = reader.schema(state.schema)
+            out = reader.load(path)
         else:
             # lineage break without durable write
             out = state.localCheckpoint(eager=True)
@@ -428,6 +434,16 @@ class SuperstepLoop:
             self._kept = []
         for df in tail:
             release_local_checkpoint(df)
+
+
+def _file_rows(path: str) -> list[int]:
+    """Rows per data file of a parquet snapshot, in file-name (= write
+    task) order, read from the footers without a Spark job."""
+    return [
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in sorted(os.listdir(path))
+        if not f.startswith(("_", "."))
+    ]
 
 
 def _jsonable(d: dict) -> dict:

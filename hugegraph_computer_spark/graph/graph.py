@@ -11,7 +11,9 @@ Mirrors the reference's runtime data model (SURVEY.md §1) without porting it:
   the columns they read. ``scatter(frontier)`` is the adjacency's reader
   for message passing — the send step of pagerank, ppr, lpa and every
   ``VertexProgram`` (wcc included); only the samplers (random walks,
-  neighborhood sampling) index its chunks directly.
+  neighborhood sampling) index its chunks directly. A vertex's degree is
+  the adjacency's ``deg`` column too (``degrees()``), so it is counted
+  once, when the adjacency is cached.
 * the reference symmetrizes the graph at load by default — for every loaded
   edge u→v it also creates v→u with property inv=true
   (computer-core/.../input/WorkerInputManager.java:104-122), so all
@@ -309,21 +311,19 @@ class Graph:
             self._num_vertices = self.vertices().count()
         return self._num_vertices
 
-    def degrees(self, weighted: bool = False) -> DataFrame:
+    def degrees(self) -> DataFrame:
         """(vid, deg) — out-degree of the (already symmetrized) edge table;
         0 for isolated vertices. This is the reference's ``numEdges()``
-        under default inverse-edge loading."""
-        agg = (
-            F.sum("weight").alias("deg")
-            if weighted
-            else F.count(F.lit(1)).cast("long").alias("deg")
-        )
-        d = self.edges.groupBy(F.col("src").alias("vid")).agg(agg)
-        zero = F.lit(0.0) if weighted else F.lit(0).cast("long")
+        under default inverse-edge loading, which it reads from the edges
+        loaded with the vertex (PageRank.java:64-77). Here it is a column
+        of the cached ``adjacency()``: ``deg`` repeats the total degree on
+        every chunk row, so chunk 0 carries it once per vertex, and no
+        second pass re-runs the edge table's (possibly long) ingest plan."""
+        deg = self.adjacency().where(F.col("chunk_no") == 0).select("vid", "deg")
         return (
             self.vertices()
-            .join(d, "vid", "left")
-            .select("vid", F.coalesce("deg", zero).alias("deg"))
+            .join(deg, "vid", "left")
+            .select("vid", F.coalesce("deg", F.lit(0).cast("long")).alias("deg"))
         )
 
     def adjacency(self) -> DataFrame:

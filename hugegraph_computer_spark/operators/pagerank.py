@@ -21,7 +21,11 @@ allclose 1e-6:
   default 1e-5, the north rule also runs 1e-6), or at max supersteps
   (bsp.max_super_step default 10, ComputerOptions.java:363-369).
 
-Spark realization: state is ``(vid, rank, deg)``; one superstep =
+Spark realization: state is ``(vid, rank, deg)``. Superstep 0 takes ``deg``
+from ``Graph.degrees()``, the ``deg`` column of the cached adjacency that
+every superstep scatters over — like ``vertex.numEdges()`` in compute0,
+which reads the edges loaded with the vertex instead of recounting them.
+One superstep =
 
     summed  = _push(state)                         -- Graph.scatter of
                                                    -- (vid, rank/deg), then

@@ -133,6 +133,115 @@ def test_snapshot_meta_carries_lineage_and_aggregates(spark, tmp_path):
     late = [m for m in metas if m["superstep"] > 0]
     assert all("partition_rows" in m["metrics"] for m in metas)
     assert all("l1" in m["aggregates"] for m in late)
+    n = g.num_vertices()
+    for m in metas:
+        rows = m["metrics"]["partition_rows"]
+        assert sum(rows) == m["metrics"]["rows"] == n, m
+
+
+def _jobs_in_group(spark, group, action):
+    """How many Spark jobs ``action()`` launches, counted through a job
+    group once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_durable_materialize_runs_only_the_write(spark, tmp_path):
+    """A durable superstep costs what writing its state costs: the
+    read-back handle and the row-count metric launch no job of their own."""
+    from hugegraph_computer_spark.graph.bsp import SuperstepLoop
+
+    df = spark.range(100).select(F.col("id").alias("vid"), (F.col("id") % 7).alias("x"))
+    loop = SuperstepLoop(spark, "j", str(tmp_path / "ck"), 3)
+    out = []
+    durable = _jobs_in_group(
+        spark, "durable-materialize", lambda: out.append(loop.materialize(1, df))
+    )
+    plain = _jobs_in_group(
+        spark, "plain-write", lambda: df.write.parquet(str(tmp_path / "plain"))
+    )
+    assert plain == 1
+    assert durable == plain
+    assert sorted(out[0].collect()) == sorted(df.collect())
+
+
+def _degrees_by_edge_count(g):
+    """The definition ``degrees()`` must keep: out-edges counted on the
+    edge table, 0 for a vertex with none."""
+    d = g.edges.groupBy(F.col("src").alias("vid")).agg(F.count(F.lit(1)).alias("deg"))
+    return g.vertices().join(d, "vid", "left").select(
+        "vid", F.coalesce("deg", F.lit(0).cast("long")).alias("deg")
+    )
+
+
+def test_degrees_equal_edge_count(spark):
+    """``degrees()`` reads the cached adjacency's ``deg`` column; it must
+    equal the edge count on isolated, duplicate-edge, sink-only and
+    multi-chunk hub vertices, one row per vertex."""
+    from hugegraph_computer_spark.graph.graph import DEFAULT_ADJ_CHUNK
+
+    def edges(rows):
+        return spark.createDataFrame(rows, "src long, dst long")
+
+    spokes = 10_000
+    graphs = {
+        "isolated": Graph.from_edges(
+            edges([(0, 1), (1, 2)]),
+            vertices=spark.createDataFrame([(v,) for v in range(6)], "vid long"),
+            num_partitions=4,
+        ),
+        "multiple": Graph.from_edges(
+            edges([(0, 1), (0, 1), (1, 2), (2, 2), (3, 0)]),
+            edge_freq="multiple", num_partitions=4,
+        ),
+        "directed": Graph.from_edges(
+            edges([(0, 1), (0, 2), (1, 2), (3, 4)]), symmetrize=False, num_partitions=4
+        ),
+        "star": Graph.from_edges(
+            edges([(0, i) for i in range(1, spokes + 1)]), num_partitions=4
+        ),
+    }
+    for name, g in graphs.items():
+        got = sorted(tuple(r) for r in g.degrees().collect())
+        exp = sorted(tuple(r) for r in _degrees_by_edge_count(g).collect())
+        assert got == exp, name
+    isolated = dict(tuple(r) for r in graphs["isolated"].degrees().collect())
+    assert isolated == {0: 1, 1: 2, 2: 1, 3: 0, 4: 0, 5: 0}
+    assert dict(tuple(r) for r in graphs["directed"].degrees().collect())[4] == 0
+    star = graphs["star"]
+    assert star.adjacency().where("vid = 0").count() == -(-spokes // DEFAULT_ADJ_CHUNK) == 3
+    hub = star.degrees().where("vid = 0").collect()
+    assert [tuple(r) for r in hub] == [(0, spokes)]
+
+
+def _plan_node_names(plan) -> list[str]:
+    """Node names of a Catalyst plan tree. A cached relation is a leaf
+    here: the plan it was built from is not walked."""
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _plan_node_names(kids.apply(i))
+    ]
+
+
+def test_degrees_do_not_rerun_corpus_extraction(spark):
+    """On a corpus graph, ``degrees()`` over the cached adjacency must not
+    re-run the ingest — no Python UDF evaluation in its plan."""
+    from hugegraph_computer_spark.sources.corpus import synth_corpus
+    from hugegraph_computer_spark.sources.extract import corpus_graph
+
+    g, _ = corpus_graph(synth_corpus(spark, n_repos=30, files_per_repo=3, seed=3),
+                        num_partitions=4)
+    g.adjacency().count()
+    names = _plan_node_names(g.degrees()._jdf.queryExecution().optimizedPlan())
+    python = [n for n in names if n in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")]
+    assert not python, names
+    assert "InMemoryRelation" in names, names
 
 
 def test_cosine_topk_broadcasts_queries(spark):
