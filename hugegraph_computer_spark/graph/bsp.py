@@ -30,8 +30,9 @@ What the reference left as a TODO — resume (MasterService.java:213, 316-322)
   to ``{dir}/{job}/superstep={s}/`` as parquet, plus a ``_meta.json`` carrying
   the superstep id, the global aggregator values, per-file row counts
   (lineage, read from the written files' parquet footers), and wall-clock
-  metrics. The write is the superstep's only Spark job: the read-back
-  reuses the written frame's schema instead of inferring it;
+  metrics, and the written frame's schema. The write is the superstep's
+  only Spark job: the read-back, and a later ``read_step``, reuse that
+  schema instead of inferring it;
 * ``SuperstepLoop.resume()`` finds the latest *complete* snapshot (the meta
   file is written after the parquet commit, so a job killed mid-write
   resumes from the previous superstep) and the algorithm continues from it;
@@ -63,6 +64,7 @@ from functools import reduce
 
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 #: non-durable state generations kept pinned: the current one and the one
 #: it was derived from
@@ -300,11 +302,12 @@ class SuperstepLoop:
         superstep runs the write and nothing else: the handle reads the
         same files back under the schema just written, and the
         ``partition_rows`` metric (one count per written file, summed into
-        ``rows``) comes from the parquet footers on the driver. Other
-        snapshot formats record no row counts. A non-durable frame joins
+        ``rows``) comes from the parquet footers on the driver; the schema
+        goes into the meta too, so ``read_step`` reads under it. Other
+        snapshot formats record neither. A non-durable frame joins
         ``pinned`` when given, else the rolling window of
         ``RELEASE_WINDOW`` generations."""
-        self._pending_metrics = {}
+        self._pending_metrics, self._pending_schema = {}, None
         if self.dir is not None:
             path = self._step_dir(superstep)
             if os.path.exists(path):
@@ -318,6 +321,7 @@ class SuperstepLoop:
                     "rows": sum(part_counts),
                 }
                 reader = reader.schema(state.schema)
+                self._pending_schema = state.schema.jsonValue()
             out = reader.load(path)
         else:
             # lineage break without durable write
@@ -346,6 +350,7 @@ class SuperstepLoop:
                         "superstep": superstep,
                         "aggregates": _jsonable(record.aggregates),
                         "metrics": _jsonable(record.metrics),
+                        "schema": getattr(self, "_pending_schema", None),
                         "ts": time.time(),
                     },
                     f,
@@ -392,10 +397,15 @@ class SuperstepLoop:
         return usable
 
     def read_step(self, superstep: int) -> DataFrame:
-        """Read one durable superstep snapshot back (lineage-free)."""
-        return self.spark.read.format(self.snapshot_format).load(
-            self._step_dir(superstep)
-        )
+        """Read one durable superstep snapshot back (lineage-free) under the
+        schema its meta recorded, so the read launches no job. A meta
+        without one (another format, or a snapshot written before the
+        schema was recorded) leaves the schema to the reader's inference."""
+        reader = self.spark.read.format(self.snapshot_format)
+        schema = self._meta(superstep).get("schema")
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.load(self._step_dir(superstep))
 
     def discard_step(self, superstep: int) -> None:
         """Drop a durable snapshot (used for the final EMPTY frontier: the

@@ -171,6 +171,22 @@ def test_durable_materialize_runs_only_the_write(spark, tmp_path):
     assert sorted(out[0].collect()) == sorted(df.collect())
 
 
+def test_read_step_reads_under_recorded_schema(spark, tmp_path):
+    """A snapshot read back by ``read_step`` (every resume) launches no job
+    before its first action: the schema written at commit is reused, not
+    inferred from the files."""
+    from hugegraph_computer_spark.graph.bsp import SuperstepLoop
+
+    df = spark.range(100).select(F.col("id").alias("vid"), (F.col("id") % 7).alias("x"))
+    loop = SuperstepLoop(spark, "j", str(tmp_path / "ck"), 3)
+    loop.save(1, df, {})
+    out = []
+    jobs = _jobs_in_group(spark, "read-step", lambda: out.append(loop.read_step(1)))
+    assert jobs == 0
+    assert out[0].schema == loop.materialize(2, df).schema
+    assert sorted(out[0].collect()) == sorted(df.collect())
+
+
 def _degrees_by_edge_count(g):
     """The definition ``degrees()`` must keep: out-edges counted on the
     edge table, 0 for a vertex with none."""

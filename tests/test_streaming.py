@@ -39,14 +39,15 @@ def test_incremental_batches_match_batch_wcc(spark, tmp_path):
         assert got == ref_wcc(sorted(adj), adj)
 
 
-def _bucket_files(path):
-    """{relative file path: md5} for every data file under a bucket dir."""
+def _bucket_files(path, hidden=False):
+    """{relative file path: md5} for every data file under a bucket dir
+    (with ``hidden``, for every file: sidecars and markers too)."""
     import hashlib
 
     state = {}
     for root, _, files in os.walk(path):
         for f in files:
-            if f.startswith((".", "_")):
+            if not hidden and f.startswith((".", "_")):
                 continue
             p = os.path.join(root, f)
             with open(p, "rb") as fh:
@@ -92,6 +93,90 @@ def test_incremental_wcc_noop_batch_rewrites_nothing(spark, tmp_path):
     before = _bucket_files(labels_path)
     incremental_wcc_batch(edges_df(spark, [(0, 1)]), labels_path, spark)
     assert _bucket_files(labels_path) == before
+
+
+def test_incremental_wcc_empty_batch_writes_nothing(spark, tmp_path):
+    """An empty batch creates no table, and leaves an existing one
+    byte-identical, bucket-count sidecar included."""
+    labels_path = str(tmp_path / "labels")
+    incremental_wcc_batch(edges_df(spark, []), labels_path, spark)
+    assert not os.path.exists(labels_path)
+    incremental_wcc_batch(edges_df(spark, [(0, 1), (2, 3)]), labels_path, spark)
+    before = _bucket_files(labels_path, hidden=True)
+    assert "_n_buckets.json" in before
+    incremental_wcc_batch(edges_df(spark, []), labels_path, spark)
+    assert _bucket_files(labels_path, hidden=True) == before
+
+
+def test_incremental_wcc_self_loop_adds_only_its_vertex(spark, tmp_path):
+    """A self-loop on a new vertex brings a new vertex without any merge
+    pair: it labels itself, and only its bucket is rewritten."""
+    labels_path = str(tmp_path / "labels")
+    b1 = [(i, i + 1000) for i in range(0, 40, 2)]
+    incremental_wcc_batch(edges_df(spark, b1), labels_path, spark)
+    before = _bucket_files(labels_path)
+    incremental_wcc_batch(edges_df(spark, [(99, 99)]), labels_path, spark)
+    after = _bucket_files(labels_path)
+    got = {
+        r["vid"]: (r["component"], r["bucket"])
+        for r in spark.read.parquet(labels_path).collect()
+    }
+    assert got[99][0] == 99
+    adj = symmetrize(b1)
+    assert {v: c for v, (c, _) in got.items() if v != 99} == ref_wcc(sorted(adj), adj)
+    home = f"bucket={got[99][1]}"
+    changed = {rel.split(os.sep)[0] for rel in set(before) ^ set(after)}
+    changed |= {rel.split(os.sep)[0] for rel in before if after.get(rel) != before[rel]}
+    assert changed == {home}
+
+
+def test_incremental_wcc_noop_fold_job_budget(spark, tmp_path):
+    """Folding a batch whose edges all lie inside existing components
+    costs two actions' worth of Spark jobs: the lookup's questions (is the
+    batch empty, which buckets, any merges, any new vertices) ride the
+    two materializations, not a job each."""
+    from tests.test_plans_and_resume import _jobs_in_group
+
+    labels_path = str(tmp_path / "labels")
+    incremental_wcc_batch(edges_df(spark, [(0, 1), (2, 3)]), labels_path, spark)
+    before = _bucket_files(labels_path)
+    batch = edges_df(spark, [(0, 1), (3, 2)])
+    jobs = _jobs_in_group(
+        spark, "noop-fold", lambda: incremental_wcc_batch(batch, labels_path, spark)
+    )
+    assert _bucket_files(labels_path) == before
+    assert jobs <= 5, jobs
+
+
+def test_incremental_wcc_releases_collapse_cache(spark, tmp_path):
+    """Batches that merge components leave nothing cached behind: the
+    label-collapse graph's cached frames and its WCC state are freed."""
+    jsc = spark.sparkContext._jsc.sc()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def held():
+        return cache.cachedData().size(), jsc.getPersistentRDDs().size()
+
+    labels_path = str(tmp_path / "labels")
+    b1 = [(i, i + 1000) for i in range(0, 40, 2)]
+    incremental_wcc_batch(edges_df(spark, b1), labels_path, spark)
+    base = held()
+    for batch in ([(0, 2)], [(4, 6), (1006, 8)], [(2, 10), (12, 14)]):
+        incremental_wcc_batch(edges_df(spark, batch), labels_path, spark)
+        now = held()
+        assert now[0] <= base[0] and now[1] <= base[1], (base, now)
+
+
+def test_incremental_batches_match_batch_wcc_without_broadcast(spark, tmp_path):
+    """The endpoint-label joins left to the planner (broadcast disabled)
+    fold to the same labels."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        test_incremental_batches_match_batch_wcc(spark, tmp_path)
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_streaming_files_end_to_end(spark, tmp_path):
