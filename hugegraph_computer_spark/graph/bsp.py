@@ -42,13 +42,6 @@ What the reference left as a TODO — resume (MasterService.java:213, 316-322)
   this, an iterative DataFrame program re-analyzes an exponentially growing
   plan (SURVEY.md §4). When no checkpoint dir is configured we break lineage
   with ``localCheckpoint`` instead.
-
-Scale: state snapshots are hash-partitioned parquet; at 10^12-file scale the
-snapshot is an Iceberg table write per superstep. The writer is a tested
-FORMAT SEAM (``SuperstepLoop(snapshot_format=...)`` routes every durable
-write/read through ``.format(fmt)``), so Iceberg is a constructor argument
-on a cluster that ships the runtime jar — this sandbox has none, so the
-default "parquet" exercises the identical code path and layout semantics.
 """
 
 from __future__ import annotations
@@ -86,6 +79,14 @@ def release_local_checkpoint(df: DataFrame) -> None:
             df.unpersist()
         except Exception:
             pass
+
+
+def release_projected_checkpoint(df: DataFrame) -> None:
+    """Free the ``localCheckpoint`` a projection reads: the frame an
+    operator built on ``SuperstepLoop.run`` returns (``wcc``'s
+    ``state.select(...)``) keeps the loop's last state pinned for its
+    caller; once the caller has pinned what it derived, this frees it."""
+    df._jdf.queryExecution().analyzed().child().rdd().unpersist(False)
 
 
 class RolledUnion:
@@ -131,7 +132,6 @@ class SuperstepLoop:
         job_name: str,
         checkpoint_dir: str | None = None,
         max_supersteps: int = 10,
-        snapshot_format: str = "parquet",
         resume: bool = False,
     ):
         self.spark = spark
@@ -145,14 +145,6 @@ class SuperstepLoop:
         if self.dir and not resume and os.path.isdir(self.dir):
             shutil.rmtree(self.dir)
         self.max_supersteps = max_supersteps
-        # The snapshot writer is a FORMAT SEAM, not a hardcoded call: every
-        # durable write/read goes through .format(snapshot_format) — on a
-        # cluster with the Iceberg runtime jar, snapshot_format="iceberg"
-        # (plus a catalog-qualified path) turns each superstep into an
-        # Iceberg snapshot commit with time-travel, which is the north
-        # rule's lineage story. This sandbox has no Iceberg jar, so the
-        # default (and the tests) exercise the same code path with parquet.
-        self.snapshot_format = snapshot_format
         self._resume = resume
         self.history: list[SuperstepRecord] = []
         self._persisted: list[DataFrame] = []  # rolling state generations
@@ -303,26 +295,22 @@ class SuperstepLoop:
         same files back under the schema just written, and the
         ``partition_rows`` metric (one count per written file, summed into
         ``rows``) comes from the parquet footers on the driver; the schema
-        goes into the meta too, so ``read_step`` reads under it. Other
-        snapshot formats record neither. A non-durable frame joins
-        ``pinned`` when given, else the rolling window of
-        ``RELEASE_WINDOW`` generations."""
+        goes into the meta too, so ``read_step`` reads under it. A
+        non-durable frame joins ``pinned`` when given, else the rolling
+        window of ``RELEASE_WINDOW`` generations."""
         self._pending_metrics, self._pending_schema = {}, None
         if self.dir is not None:
             path = self._step_dir(superstep)
             if os.path.exists(path):
                 shutil.rmtree(path)
-            state.write.mode("overwrite").format(self.snapshot_format).save(path)
-            reader = self.spark.read.format(self.snapshot_format)
-            if self.snapshot_format == "parquet":
-                part_counts = _file_rows(path)
-                self._pending_metrics = {
-                    "partition_rows": part_counts,
-                    "rows": sum(part_counts),
-                }
-                reader = reader.schema(state.schema)
-                self._pending_schema = state.schema.jsonValue()
-            out = reader.load(path)
+            state.write.mode("overwrite").parquet(path)
+            part_counts = _file_rows(path)
+            self._pending_metrics = {
+                "partition_rows": part_counts,
+                "rows": sum(part_counts),
+            }
+            self._pending_schema = state.schema.jsonValue()
+            out = self.spark.read.schema(state.schema).parquet(path)
         else:
             # lineage break without durable write
             out = state.localCheckpoint(eager=True)
@@ -399,13 +387,13 @@ class SuperstepLoop:
     def read_step(self, superstep: int) -> DataFrame:
         """Read one durable superstep snapshot back (lineage-free) under the
         schema its meta recorded, so the read launches no job. A meta
-        without one (another format, or a snapshot written before the
-        schema was recorded) leaves the schema to the reader's inference."""
-        reader = self.spark.read.format(self.snapshot_format)
+        without one (a snapshot written before the schema was recorded)
+        leaves the schema to parquet's inference."""
+        reader = self.spark.read
         schema = self._meta(superstep).get("schema")
         if schema is not None:
             reader = reader.schema(StructType.fromJson(schema))
-        return reader.load(self._step_dir(superstep))
+        return reader.parquet(self._step_dir(superstep))
 
     def discard_step(self, superstep: int) -> None:
         """Drop a durable snapshot (used for the final EMPTY frontier: the

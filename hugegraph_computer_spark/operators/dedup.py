@@ -213,7 +213,10 @@ def dedup_clusters(
     """
     from pyspark.sql import Observation
 
-    from hugegraph_computer_spark.graph.bsp import release_local_checkpoint
+    from hugegraph_computer_spark.graph.bsp import (
+        release_local_checkpoint,
+        release_projected_checkpoint,
+    )
     from hugegraph_computer_spark.graph.graph import Graph
     from hugegraph_computer_spark.operators.wcc import wcc
 
@@ -242,10 +245,15 @@ def dedup_clusters(
     if int(obs.get["n"] or 0) == 0:  # no near-dups at all: every doc keeps itself
         release_local_checkpoint(edges)
         return ids.select("doc_id", F.col("doc_id").alias("keep_id"))
-    comp = wcc(Graph.from_edges(edges), job_name="dedup_clusters_wcc")
+    g = Graph.from_edges(edges)
+    comp = wcc(g, job_name="dedup_clusters_wcc")
     out = ids.join(comp, ids["doc_id"] == comp["vid"], "left").select(
         "doc_id", F.coalesce(comp["component"], ids["doc_id"]).alias("keep_id")
     ).localCheckpoint(eager=True)
+    # out is pinned: free the graph's cached frames and the WCC state comp
+    # projects, which would otherwise stay cached for the session
+    g.unpersist()
+    release_projected_checkpoint(comp)
     release_local_checkpoint(edges)
     return out
 

@@ -7,7 +7,6 @@ merge is Spark's job. Each keeps the reference's observable format:
 
 | reference                                   | here              |
 |---------------------------------------------|-------------------|
-| LogOutput / LimitedLogOutput                | log_output        |
 | HdfsOutput (``id<delim>value`` text lines)  | hdfs_output       |
 | CsvStructGraphOutput / JsonStructGraphOutput| struct_output     |
 | HugeOutput (write back as OLAP properties)  | table_output      |
@@ -16,13 +15,6 @@ merge is Spark's job. Each keeps the reference's observable format:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def log_output(result: DataFrame, limit: int | None = None) -> None:
-    """LogOutput.java:33 / LimitedLogOutput.java — debug print of
-    per-vertex results; ``limit`` mirrors output.limit_edges_in_one_vertex
-    -style truncation."""
-    (result.limit(limit) if limit else result).show(limit or 20, truncate=False)
 
 
 def hdfs_output(
@@ -51,16 +43,8 @@ def struct_output(
         raise ValueError(f"struct_output: unknown fmt {fmt!r}")
 
 
-def table_output(
-    result: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
+def table_output(result: DataFrame, path: str, mode: str = "overwrite") -> None:
     """HugeOutput.java:35 equivalent: persist per-vertex values as a table
     other jobs join against (parquet here; Iceberg in production — same
     writer API with ``.format("iceberg")``)."""
-    w = result.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    result.write.mode(mode).parquet(path)

@@ -78,6 +78,7 @@ def _collapse_labels(pairs: DataFrame, pinned: list) -> DataFrame:
     own min-label fixpoint — a one-pass min-neighbor + pointer jump is NOT
     sufficient (a min label must be able to flow through a larger
     intermediate label, e.g. 5—6—0 must collapse 5 to 0)."""
+    from hugegraph_computer_spark.graph.bsp import release_projected_checkpoint
     from hugegraph_computer_spark.graph.graph import Graph
     from hugegraph_computer_spark.operators.wcc import wcc
 
@@ -90,7 +91,7 @@ def _collapse_labels(pairs: DataFrame, pinned: list) -> DataFrame:
     # state ``comp`` projects (wcc leaves it pinned for its caller), which
     # would otherwise stay cached for the session, batch after batch
     g.unpersist()
-    comp._jdf.queryExecution().analyzed().child().rdd().unpersist(False)
+    release_projected_checkpoint(comp)
     return mapping
 
 

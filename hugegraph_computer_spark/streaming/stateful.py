@@ -1,11 +1,10 @@
-"""Custom stateful streaming operator — ``applyInPandasWithState``.
+"""Streaming gap sessionization — ``applyInPandasWithState``.
 
-``streaming/sessions.py`` uses the declarative ``session_window`` path,
-which is the right default; but its append-mode output cannot carry a
-per-entity SESSION ORDINAL (the batch ``operators.events.sessionize``
-contract includes ``session_id`` = the user's 0-based session index),
-because a windowed aggregation has no cross-window per-key state. That
-running ordinal is a genuine custom state machine, so this module is the
+A declarative ``session_window`` aggregation cannot carry a per-entity
+SESSION ORDINAL (the batch ``operators.events.sessionize`` contract
+includes ``session_id`` = the user's 0-based session index), because a
+windowed aggregation has no cross-window per-key state. That running
+ordinal is a genuine custom state machine, so this module is the
 engine's ``applyInPandasWithState`` exemplar: per-user state holds the
 not-yet-finalizable event buffer plus the closed-session count, and the
 event-time watermark drives both finalization and state eviction.
@@ -21,7 +20,7 @@ open), the bounded-state contract a 100 TB/day feed needs.
 
 Reference scope note: the reference engine is batch-BSP only
 (SURVEY.md §2.9); this is engine surface for the streaming
-training-data-pipeline case, like streaming/sessions.py.
+training-data-pipeline case.
 """
 
 from __future__ import annotations
@@ -34,6 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 US_PER_MIN = 60_000_000
+
+EVENT_DDL = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
 
 OUTPUT_DDL = (
     "user_id long, session_id long, n_events long, "
@@ -174,7 +178,6 @@ def run_stateful_sessionize(
     query_name: str = "stateful_sessions",
     gap_minutes: int = 30,
     watermark_minutes: int = 60,
-    schema: str | None = None,
     max_files_per_trigger: int | None = None,
 ):
     """availableNow query writing finalized (closed) sessions to an
@@ -182,9 +185,7 @@ def run_stateful_sessionize(
     event-time timeouts that close sessions behind the final watermark.
     ``max_files_per_trigger=1`` forces one micro-batch per input file —
     the cross-batch state/watermark path the tests exercise."""
-    from hugegraph_computer_spark.streaming.sessions import EVENT_DDL
-
-    reader = spark.readStream.schema(schema or EVENT_DDL)
+    reader = spark.readStream.schema(EVENT_DDL)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     src = reader.parquet(events_path)

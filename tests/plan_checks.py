@@ -2,9 +2,9 @@
 
 The reference has no optimizer (SURVEY.md §4); Catalyst is ours, and these
 helpers make its behavior testable: predicate pushdown reaching the parquet
-scan, broadcast joins where a side is small, whole-stage codegen coverage,
-and absence of accidental cartesian products. Used in tests/test_plans.py
-so a regression that silently de-optimizes a pipeline fails CI.
+scan, broadcast joins where a side is small, the number of file scans a
+composition makes, and absence of accidental cartesian products, so a
+regression that silently de-optimizes a pipeline fails a test.
 """
 
 from __future__ import annotations
@@ -55,10 +55,3 @@ def count_file_scans(df: DataFrame, path_fragment: str | None = None) -> int:
     if path_fragment is not None:
         scans = [s for s in scans if path_fragment in s]
     return len(scans)
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans (bigger spans = fewer = better;
-    returns the count so tests can bound Python/codegen boundaries)."""
-    plan = explain_str(df)
-    return len(re.findall(r"WholeStageCodegen \(\d+\)", plan))

@@ -229,7 +229,7 @@ def test_export_shards_roundtrip_and_balance(spark, tmp_path):
            back.select("doc_id", "shard").collect()}
     assert got == expect
     # partition pruning: a shard=3 filter scans one directory
-    from hugegraph_computer_spark.plans.checks import explain_str
+    from tests.plan_checks import explain_str
 
     plan = explain_str(back.where(F.col("shard") == 3))
     assert "shard=3" in plan or "PartitionFilters" in plan

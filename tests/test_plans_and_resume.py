@@ -23,7 +23,7 @@ from hugegraph_computer_spark.operators import (
     personalized_pagerank,
     wcc,
 )
-from hugegraph_computer_spark.plans.checks import (
+from tests.plan_checks import (
     assert_no_cartesian,
     assert_pushed_filters,
     explain_str,
@@ -174,15 +174,19 @@ def test_durable_materialize_runs_only_the_write(spark, tmp_path):
 def test_read_step_reads_under_recorded_schema(spark, tmp_path):
     """A snapshot read back by ``read_step`` (every resume) launches no job
     before its first action: the schema written at commit is reused, not
-    inferred from the files."""
+    inferred from the files. ``resume()`` returns the saved superstep, its
+    rows and its aggregates."""
     from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 
     df = spark.range(100).select(F.col("id").alias("vid"), (F.col("id") % 7).alias("x"))
     loop = SuperstepLoop(spark, "j", str(tmp_path / "ck"), 3)
-    loop.save(1, df, {})
+    aggs = {"a": 1, "delta": 0.25, "continue": True}
+    loop.save(1, df, aggs)
     out = []
     jobs = _jobs_in_group(spark, "read-step", lambda: out.append(loop.read_step(1)))
     assert jobs == 0
+    s, state, resumed_aggs = loop.resume()
+    assert (s, sorted(state.collect()), resumed_aggs) == (1, sorted(df.collect()), aggs)
     assert out[0].schema == loop.materialize(2, df).schema
     assert sorted(out[0].collect()) == sorted(df.collect())
 
@@ -264,7 +268,7 @@ def test_cosine_topk_broadcasts_queries(spark):
     """The small query side must broadcast — at 10^9 corpus vectors the
     corpus side streams and only the query batch replicates."""
     from hugegraph_computer_spark.operators.similarity import cosine_topk
-    from hugegraph_computer_spark.plans.checks import assert_broadcast_join
+    from tests.plan_checks import assert_broadcast_join
 
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(50)],
@@ -284,28 +288,6 @@ def test_pagerank_scatter_has_partial_aggregate(spark):
     plan = explain_str(msgs)
     pre_exchange = plan.split("Exchange hashpartitioning(dst", 1)[0]
     assert "HashAggregate" in pre_exchange, plan[:2000]
-
-
-def test_snapshot_format_seam(spark, tmp_path):
-    """The durable snapshot writer is a format seam: an explicit
-    snapshot_format routes write+read+resume through .format(fmt) (Iceberg
-    on a cluster with the runtime jar; parquet here), and an unknown
-    format fails AT the seam — proving nothing bypasses it."""
-    from hugegraph_computer_spark.graph.bsp import SuperstepLoop
-
-    loop = SuperstepLoop(
-        spark, "seam", str(tmp_path), max_supersteps=3, snapshot_format="parquet"
-    )
-    df = spark.range(10).select(F.col("id").alias("vid"))
-    loop.save(0, df, {"a": 1})
-    s, state, aggs = loop.resume()
-    assert s == 0 and state.count() == 10 and aggs == {"a": 1}
-
-    bogus = SuperstepLoop(
-        spark, "seam2", str(tmp_path), max_supersteps=3, snapshot_format="no-such-fmt"
-    )
-    with pytest.raises(Exception):
-        bogus.save(0, df, {})
 
 
 def test_level_flood_join_no_exchange_on_cached_flat_edges(spark):

@@ -22,7 +22,7 @@ from hugegraph_computer_spark.operators.similarity import (
     ivf_topk,
 )
 from hugegraph_computer_spark.operators.text import curation_filter, lang_id, quality_score
-from hugegraph_computer_spark.plans.checks import count_file_scans
+from tests.plan_checks import count_file_scans
 
 SF = "/root/testdata/sf0.001"
 
@@ -156,6 +156,33 @@ def test_pair_ops_release_their_band_checkpoints(spark):
     release_local_checkpoint(p1)
     release_local_checkpoint(p2)
     assert pinned() <= base
+
+
+def test_dedup_clusters_releases_wcc_cache(spark):
+    """Repeated dedup_clusters calls leave nothing cached but the frame
+    each returns: the verified-pair graph's cached frames and the WCC
+    state the clusters project are freed."""
+    from hugegraph_computer_spark.graph.bsp import release_local_checkpoint
+
+    jsc = spark.sparkContext._jsc.sc()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def held():
+        return cache.cachedData().size(), jsc.getPersistentRDDs().size()
+
+    texts = ["alpha beta gamma delta epsilon zeta eta theta",
+             "one two three four five six seven eight"]
+    rows = [(i, texts[i % 2] if i % 5 else f"unique doc {i} with its own words")
+            for i in range(20)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    base = held()
+    for _ in range(3):
+        out = dedup_clusters(docs, threshold=0.3)
+        keep = dict(tuple(r) for r in out.collect())
+        assert keep[3] == 1 and keep[4] == 2 and keep[5] == 5
+        release_local_checkpoint(out)
+        now = held()
+        assert now[0] <= base[0] and now[1] <= base[1], (base, now)
 
 
 # -------------------------------------------------- multimodal oracle parity

@@ -199,59 +199,6 @@ def test_streaming_files_end_to_end(spark, tmp_path):
     assert got == df_to_dict(wcc(g), "vid", "component")
 
 
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    """Watermark-finalized streaming sessions must equal the batch
-    sessionize rollup on the same events (same gap rule)."""
-    from pyspark.sql import functions as F
-
-    from hugegraph_computer_spark.operators.events import sessionize
-    from hugegraph_computer_spark.streaming.sessions import run_streaming_sessionize
-
-    events_dir = str(tmp_path / "events")
-    ckpt = str(tmp_path / "sess_ckpt")
-    os.makedirs(events_dir)
-    rows = [
-        # user 1: one session (0,10min), second session at 50min
-        (1, "2024-01-01 00:00:00", 1, "view", 1.0, "{}"),
-        (2, "2024-01-01 00:10:00", 1, "click", 2.0, "{}"),
-        (3, "2024-01-01 00:50:00", 1, "view", 4.0, "{}"),
-        # user 2: one session
-        (4, "2024-01-01 00:05:00", 2, "view", 8.0, "{}"),
-        # watermark flusher: far-future event closes everything above
-        (99, "2024-01-01 12:00:00", 9, "view", 0.0, "{}"),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts_s string, user_id long, event_type string, "
-              "value double, props string"
-    ).select(
-        "event_id", F.col("ts_s").cast("timestamp").alias("ts"),
-        "user_id", "event_type", "value", "props",
-    )
-    df.write.mode("overwrite").parquet(f"{events_dir}/f1.parquet")
-    q = run_streaming_sessionize(
-        spark, f"{events_dir}/*", ckpt, query_name="sess_test"
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["n_events"], r["value_sum"])
-        for r in spark.sql("SELECT * FROM sess_test").collect()
-    }
-    # batch twin (drop the flusher's still-open session bucket comparison:
-    # user 9's session is NOT finalized by the watermark, so the stream
-    # must emit exactly the closed sessions)
-    batch = {
-        (r["user_id"], r["n_events"], r["value_sum"])
-        for r in sessionize(
-            df.where(F.col("user_id") != 9).select(
-                "event_id", F.col("ts").cast("timestamp_ntz").alias("ts"),
-                "user_id", "event_type", "value", "props",
-            )
-        ).collect()
-    }
-    assert got == batch
-    assert (1, 2, 3.0) in got and (1, 1, 4.0) in got and (2, 1, 8.0) in got
-
-
 def test_stateful_sessionize_ordinals_match_batch(spark, tmp_path):
     """applyInPandasWithState sessionize must reproduce the batch
     sessionize rollup EXACTLY — including the per-user session ordinal
